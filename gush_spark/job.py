@@ -20,6 +20,13 @@ spark-submit; this module only applies the engine's semantic confs
 (state store, Arrow, timezone — session.ENGINE_CONFS). Resume is the
 reference's postRestart analog: re-submit with the same --checkpoint
 and the stream continues from committed offsets.
+
+``--lineage PATH`` applies to every pipeline: a ``LineageListener``
+appends each microbatch's progress to PATH, and the pipeline's runner
+appends one ``partition_lineage`` record (per-partition row counts of
+the rows the sink committed) per batch. Flags that apply to only some
+pipelines are declared once in ``PIPELINE_FLAGS``; setting one on
+another pipeline fails at parse time, before a cluster is provisioned.
 """
 
 from __future__ import annotations
@@ -64,16 +71,79 @@ def build_cluster_session(app_name: str) -> SparkSession:
     return builder.getOrCreate()
 
 
+CURATION = ("curation",)
+
+#: Every pipeline-specific flag, declared once:
+#: ``(flag, pipelines it applies to, pipeline kwarg it sets, help,
+#: argparse options)``. The kwarg is None for a post-drain report or a
+#: config setting. A flag left at its default is neither checked nor
+#: passed; set on any other pipeline it is a parse error.
+PIPELINE_FLAGS = (
+    ("--input-format", tuple(p for p in PIPELINES if p not in ("cep", "state")), None,
+     "pages container: parquet shards or raw WARC archives (cep/state "
+     "consume the page_events change stream)",
+     dict(choices=("parquet", "warc"), default="parquet")),
+    ("--scrub", CURATION, "scrub",
+     "redact PII from extracted text before the quality gates "
+     "(operators/scrub)", dict(action="store_true")),
+    ("--max-pii", CURATION, "max_pii",
+     "with --scrub, drop pages with more than N PII matches", dict(type=int)),
+    ("--bench-keys", CURATION, "bench_keys",
+     "parquet of distinct benchmark shingle md5s (column sk, see "
+     "operators/decontaminate.benchmark_ngram_keys) — gate out "
+     "contaminated pages", {}),
+    ("--bench-bloom", CURATION, "bench_bitmap",
+     "parquet of a Bloom bitmap (word_idx, word — operators/decontaminate."
+     "benchmark_bloom_bitmap) for reference sets too big to broadcast "
+     "exactly; mutually exclusive with --bench-keys", {}),
+    ("--quality-threshold", CURATION, "quality_threshold",
+     "minimum quality_score to keep a page", dict(type=float, default=0.5)),
+    ("--lang", CURATION, "lang",
+     "keep pages whose predicted language matches (lang-ID is the n-gram "
+     "stopword profile)", dict(default="en")),
+    ("--fix-encoding", CURATION, "fix_encoding",
+     "repair UTF-8-as-cp1252 mojibake inside the extraction batch, BEFORE "
+     "the dedup fingerprint (functions/encoding; lossless rounds only)",
+     dict(action="store_true")),
+    ("--lm-ref", CURATION, "lm_model",
+     "parquet of a trusted reference corpus (doc_id, text) — trains the "
+     "in-domain bigram LM at startup (operators/lm.train_bigram_lm) and "
+     "gates pages on mean bigram log-probability", {}),
+    ("--lm-min-logp", CURATION, "lm_min_logp",
+     "minimum mean bigram log-probability under the --lm-ref model to keep "
+     "a page (requires --lm-ref)", dict(type=float)),
+    ("--gopher-gate", CURATION, "gopher_gate",
+     "additionally gate pages on the seven published Gopher/MassiveText "
+     "quality rules (functions/text_analysis.gopher_rules, Rae et al. 2021 "
+     "A1.1) — stateless column expressions fused into the quality/language "
+     "projection", dict(action="store_true")),
+    ("--politeness-quota", ("cep",), "politeness_quota",
+     "run the crawl-politeness gate instead of the default machine — at "
+     "most N fetches per (host, event-time window), deferred events "
+     "flagged not dropped (streaming/cep.make_politeness_rule)",
+     dict(type=int)),
+    ("--sample-k", ("sample",), "sample_k",
+     "per-window sample size (bounded min-k state per (window, shard); "
+     "finalize with streaming/sampling.finalize_window_sample — the result "
+     "provably equals the batch twin)", dict(type=int)),
+    ("--anomaly-k", ("pages", "featurize"), None,
+     "after the drain, write a crawler-trap report (<sink>_anomalies) "
+     "flagging (host, window) counts more than K sigma above the host's "
+     "trailing baseline (integer-exact z²-test, "
+     "operators/trending.volume_anomaly_windows); availableNow mode only",
+     dict(type=int)),
+    ("--recrawl-topk", ("cep",), None,
+     "after the drain, write a recrawl schedule (<sink>_recrawl) — top-K "
+     "urls by change-rate x staleness (Cho & Garcia-Molina; "
+     "pipeline.read_recrawl_priorities); availableNow mode only",
+     dict(type=int)),
+)
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description="gushspark streaming job")
     ap.add_argument("--pipeline", choices=sorted(PIPELINES), default="pages")
     ap.add_argument("--input", required=True)
-    ap.add_argument(
-        "--input-format",
-        choices=("parquet", "warc"),
-        default="parquet",
-        help="pages container: parquet shards or raw WARC archives",
-    )
     ap.add_argument("--sink", required=True)
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--config", help="YAML job config (GushConfig analog)")
@@ -88,94 +158,8 @@ def main(argv: list[str] | None = None) -> int:
              "up to N times (the reference's actor-supervision analog; "
              "0 = fail fast)",
     )
-    ap.add_argument(
-        "--scrub", action="store_true",
-        help="curation pipeline: redact PII from extracted text before "
-             "the quality gates (operators/scrub)",
-    )
-    ap.add_argument(
-        "--max-pii", type=int, default=None,
-        help="curation pipeline: with --scrub, drop pages with more "
-             "than N PII matches",
-    )
-    ap.add_argument(
-        "--bench-keys", default=None,
-        help="curation pipeline: parquet of distinct benchmark shingle "
-             "md5s (column sk, see operators/decontaminate."
-             "benchmark_ngram_keys) — gate out contaminated pages",
-    )
-    ap.add_argument(
-        "--bench-bloom", default=None,
-        help="curation pipeline: parquet of a Bloom bitmap (word_idx, "
-             "word — operators/decontaminate.benchmark_bloom_bitmap) "
-             "for reference sets too big to broadcast exactly; "
-             "mutually exclusive with --bench-keys",
-    )
-    ap.add_argument(
-        "--quality-threshold", type=float, default=0.5,
-        help="curation pipeline: minimum quality_score to keep a page",
-    )
-    ap.add_argument(
-        "--lang", default="en",
-        help="curation pipeline: keep pages whose predicted language "
-             "matches (lang-ID is the n-gram stopword profile)",
-    )
-    ap.add_argument(
-        "--fix-encoding", action="store_true",
-        help="curation pipeline: repair UTF-8-as-cp1252 mojibake inside "
-             "the extraction batch, BEFORE the dedup fingerprint "
-             "(functions/encoding; lossless rounds only)",
-    )
-    ap.add_argument(
-        "--lm-ref", default=None,
-        help="curation pipeline: parquet of a trusted reference corpus "
-             "(doc_id, text) — trains the in-domain bigram LM at startup "
-             "(operators/lm.train_bigram_lm) and gates pages on mean "
-             "bigram log-probability",
-    )
-    ap.add_argument(
-        "--lm-min-logp", type=float, default=None,
-        help="curation pipeline: minimum mean bigram log-probability "
-             "under the --lm-ref model to keep a page (requires --lm-ref)",
-    )
-    ap.add_argument(
-        "--gopher-gate", action="store_true",
-        help="curation pipeline: additionally gate pages on the seven "
-             "published Gopher/MassiveText quality rules "
-             "(functions/text_analysis.gopher_rules, Rae et al. 2021 "
-             "A1.1) — stateless column expressions fused into the "
-             "quality/language projection",
-    )
-    ap.add_argument(
-        "--politeness-quota", type=int, default=None,
-        help="cep pipeline: run the crawl-politeness gate instead of the "
-             "default machine — at most N fetches per (host, event-time "
-             "window), deferred events flagged not dropped "
-             "(streaming/cep.make_politeness_rule)",
-    )
-    ap.add_argument(
-        "--anomaly-k", type=int, default=None,
-        help="pages/featurize pipelines: after the drain, write a "
-             "crawler-trap report (<sink>_anomalies) flagging (host, "
-             "window) counts more than K sigma above the host's trailing "
-             "baseline (integer-exact z²-test, "
-             "operators/trending.volume_anomaly_windows); availableNow "
-             "mode only",
-    )
-    ap.add_argument(
-        "--sample-k", type=int, default=None,
-        help="sample pipeline: per-window sample size (bounded min-k "
-             "state per (window, shard); finalize with "
-             "streaming/sampling.finalize_window_sample — the result "
-             "provably equals the batch twin)",
-    )
-    ap.add_argument(
-        "--recrawl-topk", type=int, default=None,
-        help="cep pipeline: after the drain, write a recrawl schedule "
-             "(<sink>_recrawl) — top-K urls by change-rate x staleness "
-             "(Cho & Garcia-Molina; pipeline.read_recrawl_priorities); "
-             "availableNow mode only",
-    )
+    for flag, pipelines, _, help_, options in PIPELINE_FLAGS:
+        ap.add_argument(flag, help=f"{'/'.join(pipelines)} pipeline: {help_}", **options)
     args = ap.parse_args(argv)
     if args.max_pii is not None and not args.scrub:
         ap.error("--max-pii requires --scrub (the gate runs on scrubbed text)")
@@ -183,38 +167,18 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("--bench-keys and --bench-bloom are mutually exclusive")
     if args.lm_min_logp is not None and not args.lm_ref:
         ap.error("--lm-min-logp requires --lm-ref (the model to score under)")
-    if args.sample_k is not None and args.pipeline != "sample":
-        ap.error("--sample-k only applies to --pipeline sample")
-    if args.politeness_quota is not None and args.pipeline != "cep":
-        ap.error("--politeness-quota only applies to --pipeline cep")
-    if args.input_format == "warc" and args.pipeline in ("cep", "state"):
-        ap.error("--input-format warc applies to page pipelines, not "
-                 "cep/state (they consume the page_events change stream)")
-    if args.anomaly_k is not None:
-        if args.pipeline not in ("pages", "featurize"):
-            ap.error("--anomaly-k only applies to --pipeline pages/featurize")
-        if args.continuous:
-            ap.error("--anomaly-k is a post-drain report (availableNow only)")
-    if args.recrawl_topk is not None:
-        if args.pipeline != "cep":
-            ap.error("--recrawl-topk only applies to --pipeline cep")
-        if args.continuous:
-            ap.error("--recrawl-topk is a post-drain report (availableNow only)")
-    if args.pipeline != "curation":
-        for flag, val, default in (
-            ("--scrub", args.scrub, False),
-            ("--max-pii", args.max_pii, None),
-            ("--bench-keys", args.bench_keys, None),
-            ("--bench-bloom", args.bench_bloom, None),
-            ("--quality-threshold", args.quality_threshold, 0.5),
-            ("--lang", args.lang, "en"),
-            ("--fix-encoding", args.fix_encoding, False),
-            ("--lm-ref", args.lm_ref, None),
-            ("--lm-min-logp", args.lm_min_logp, None),
-            ("--gopher-gate", args.gopher_gate, False),
-        ):
-            if val != default:
-                ap.error(f"{flag} only applies to --pipeline curation")
+    if args.continuous and (args.anomaly_k is not None or args.recrawl_topk is not None):
+        ap.error("--anomaly-k/--recrawl-topk are post-drain reports (availableNow only)")
+    kwargs = dict(available_now=not args.continuous, lineage_path=args.lineage)
+    for flag, pipelines, kwarg, _, _ in PIPELINE_FLAGS:
+        dest = flag[2:].replace("-", "_")
+        value = getattr(args, dest)
+        if value == ap.get_default(dest):
+            continue
+        if args.pipeline not in pipelines:
+            ap.error(f"{flag} only applies to --pipeline {'/'.join(pipelines)}")
+        if kwarg:
+            kwargs[kwarg] = value
 
     config = (
         GushSparkConfig.from_yaml(args.config) if args.config else DEFAULT_CONFIG
@@ -224,49 +188,25 @@ def main(argv: list[str] | None = None) -> int:
 
         config = dataclasses.replace(config, input_format=args.input_format)
     spark = build_cluster_session(f"gushspark_{args.pipeline}")
-    listener = LineageListener(args.lineage) if args.lineage else None
-    if listener:
-        spark.streams.addListener(listener)
+    if args.lineage:
+        spark.streams.addListener(LineageListener(args.lineage))
+    # parquet-path flags become frames (and the LM) once a session exists
+    for key in ("bench_keys", "bench_bitmap", "lm_model"):
+        if key in kwargs:
+            kwargs[key] = spark.read.parquet(kwargs[key])
+    if "lm_model" in kwargs:
+        from gush_spark.operators.lm import train_bigram_lm
 
+        kwargs["lm_model"] = train_bigram_lm(kwargs["lm_model"], "doc_id", "text")
     pipeline = PIPELINES[args.pipeline]
-    kwargs = dict(
-        config=config,
-        available_now=not args.continuous,
-    )
-    if args.pipeline in ("pages", "cep", "linkgraph", "state", "sample") \
-            and args.lineage:
-        kwargs["lineage_path"] = args.lineage
-    if args.politeness_quota is not None:
-        kwargs["politeness_quota"] = args.politeness_quota
-    if args.pipeline == "sample" and args.sample_k is not None:
-        kwargs["sample_k"] = args.sample_k
-    if args.pipeline == "curation":
-        kwargs["quality_threshold"] = args.quality_threshold
-        kwargs["lang"] = args.lang
-        if args.fix_encoding:
-            kwargs["fix_encoding"] = True
-        if args.gopher_gate:
-            kwargs["gopher_gate"] = True
-        if args.scrub:
-            kwargs["scrub"] = True
-            kwargs["max_pii"] = args.max_pii
-        if args.bench_keys:
-            kwargs["bench_keys"] = spark.read.parquet(args.bench_keys)
-        if args.bench_bloom:
-            kwargs["bench_bitmap"] = spark.read.parquet(args.bench_bloom)
-        if args.lm_ref:
-            from gush_spark.operators.lm import train_bigram_lm
 
-            ref = spark.read.parquet(args.lm_ref)
-            kwargs["lm_model"] = train_bigram_lm(ref, "doc_id", "text")
-            if args.lm_min_logp is not None:
-                kwargs["lm_min_logp"] = args.lm_min_logp
     def start():
         return pipeline(
             spark,
             args.input,
             sink_path=args.sink,
             checkpoint_path=args.checkpoint,
+            config=config,
             **kwargs,
         )
 

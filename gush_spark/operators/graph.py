@@ -1088,11 +1088,12 @@ def resource_allocation(
     both the skew fix and a no-op on the ranking). The existing-edge
     filter is a broadcast-able anti-join on (a, c) pairs; the top-k is
     a per-node WindowGroupLimit, never a global sort. Node ids and
-    three BIGINTs are the only wire payload. The deduped edge frame is
-    persisted (it feeds the adjacency twice, the degree table and the
-    anti-join — the triangle_counts discipline) so the upstream edge
-    build runs once, not four times."""
-    e = edges.select("id_a", "id_b").distinct().persist()
+    three BIGINTs are the only wire payload. The deduped edge frame
+    feeds the adjacency twice, the degree table and the anti-join, but
+    it is not persisted: its one shuffle is the same exchange in every
+    branch, which Spark reuses (ReusedExchange), so the upstream edge
+    build runs once and no cached frame outlives the call."""
+    e = edges.select("id_a", "id_b").distinct()
     adj = e.select(
         F.col("id_a").alias("node"), F.col("id_b").alias("nbr")
     ).unionByName(

@@ -1437,9 +1437,12 @@ def q_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "cube_event_stats",
     oracle="""
-    SELECT coalesce(event_type, 'ALL') AS event_type,
-           coalesce(CAST(CAST(epoch_us(ts) AS BIGINT)
-                         // 86400000000 AS VARCHAR), 'ALL') AS day_bucket,
+    SELECT CASE WHEN GROUPING(event_type) = 1 THEN 'ALL'
+                ELSE event_type END AS event_type,
+           CASE WHEN GROUPING(CAST(epoch_us(ts) AS BIGINT)
+                              // 86400000000) = 1 THEN 'ALL'
+                ELSE CAST(CAST(epoch_us(ts) AS BIGINT)
+                          // 86400000000 AS VARCHAR) END AS day_bucket,
            count(*) AS n_events,
            CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
     FROM events
@@ -1455,7 +1458,10 @@ def q_cube_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by |types|·|days| + margins — the pre-materialized
     OLAP cube every dashboard slice reads. Day buckets are the repo's
     µs-exact integer form (epoch_us DIV 86.4e9 — the paths.py
-    precision rule); value sums DECIMAL-exact with one double cast."""
+    precision rule); value sums DECIMAL-exact with one double cast.
+    Margins are labelled 'ALL' by ``grouping()``, not by a NULL key, so
+    a NULL event type or day in the data stays a NULL cell instead of
+    merging into the margin's label."""
     ev = load(spark, sf_dir, "events")
     day = F.expr(
         "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000"
@@ -1466,12 +1472,16 @@ def q_cube_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("value").cast("decimal(18,2)"))
         .cast("double")
         .alias("total_value"),
+        F.grouping("event_type").alias("_g_type"),
+        F.grouping("_day").alias("_g_day"),
     )
     return out.select(
-        F.coalesce(F.col("event_type"), F.lit("ALL")).alias("event_type"),
-        F.coalesce(F.col("_day").cast("string"), F.lit("ALL")).alias(
-            "day_bucket"
-        ),
+        F.when(F.col("_g_type") == 1, F.lit("ALL"))
+        .otherwise(F.col("event_type"))
+        .alias("event_type"),
+        F.when(F.col("_g_day") == 1, F.lit("ALL"))
+        .otherwise(F.col("_day").cast("string"))
+        .alias("day_bucket"),
         "n_events",
         "total_value",
     )

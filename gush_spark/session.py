@@ -13,10 +13,28 @@ engine assumes local mode.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DRIVER_MEM_CAP_MB = 20 * 1024
+
+
+def default_driver_memory(meminfo: str | None = None) -> str:
+    """Driver heap for a local session: half of physical RAM (``MemTotal``
+    in ``meminfo``, read from /proc/meminfo when not given), capped at
+    20g — a heap larger than RAM gets the JVM OOM-killed mid-run. 20g
+    when the size is unknown. ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    if meminfo is None:
+        try:
+            meminfo = Path("/proc/meminfo").read_text()
+        except OSError:
+            meminfo = ""
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            return f"{min(DRIVER_MEM_CAP_MB, int(line.split()[1]) // 2048)}m"
+    return f"{DRIVER_MEM_CAP_MB // 1024}g"
 
 #: engine defaults shared by local test sessions and cluster jobs
 #: (gush_spark.job applies these under spark-submit without forcing a
@@ -63,7 +81,8 @@ def build_session(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         # without libhadoop, Hadoop's RawLocalFileSystem shells out for
         # permission/status ops; the JDK's default vfork-based exec from a
         # multi-GB JVM showed multi-10s stalls under memory pressure

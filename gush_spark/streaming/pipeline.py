@@ -11,15 +11,17 @@ Two flagship assemblies:
   CEP enrichment (prior-crawl join) → exactly-once append sink. This is
   gush's full CEP layer with state gush never had.
 
-Both return the StreamingQuery; callers own trigger choice
-(AvailableNow for tests/bench, ProcessingTime in production) and
-checkpoint location (resume = same checkpoint, gush's postRestart
-analog).
+Every pipeline here hands its transformed stream to one runner,
+``_run`` — gush's single Source → flows → ``Sink.combine`` assembly
+(GushCEP.scala:15-22): ``writeStream`` → ``foreachBatch`` (optional
+per-batch step → exactly-once sink → per-partition lineage) →
+checkpoint → trigger. Each returns ``(query, sink)``; callers own the
+trigger choice (AvailableNow for tests/bench, ProcessingTime in
+production) and the checkpoint location (resume = same checkpoint,
+gush's postRestart analog).
 """
 
 from __future__ import annotations
-
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,11 +32,7 @@ from gush_spark.operators.events import blacklist_filter, host_of, supported_kin
 from gush_spark.streaming.cep import cep_enrich
 from gush_spark.streaming.metrics import partition_lineage, with_observed_metrics
 from gush_spark.streaming.sink import IdempotentKeyedSink
-from gush_spark.streaming.source import (
-    read_input_stream,
-    read_page_events_stream,
-    read_pages_stream,
-)
+from gush_spark.streaming.source import read_input_stream, read_page_events_stream
 
 
 _DURATION_UNIT_S = {
@@ -46,6 +44,70 @@ def _duration_seconds(duration: str) -> float:
     """Seconds in a Spark duration string ('10 minutes', '1 hour')."""
     n, unit = duration.strip().split()
     return float(n) * _DURATION_UNIT_S[unit.rstrip("s").lower()]
+
+
+def _run(
+    df: DataFrame,
+    sink: IdempotentKeyedSink,
+    checkpoint_path: str,
+    available_now: bool,
+    mode: str = "update",
+    lineage_path: str | None = None,
+    step=None,
+    persist: bool = False,
+):
+    """The one streaming runner every pipeline starts through.
+
+    Per microbatch: optional ``step(batch_df)`` → ``sink.write_batch``
+    → ``partition_lineage`` of the frame that was written (when
+    ``lineage_path`` is set). ``persist`` pins the microbatch for the
+    whole body, so a step that reads it several times and the lineage
+    pass do not recompute its upstream. Both callees are looked up by
+    name at call time, so tracing can patch them. Returns
+    ``(query, sink)``."""
+
+    def write(batch_df, batch_id):
+        if persist:
+            batch_df = batch_df.persist()
+        try:
+            out = batch_df if step is None else step(batch_df)
+            sink.write_batch(out, batch_id)
+            if lineage_path:
+                partition_lineage(out, batch_id, lineage_path)
+        finally:
+            if persist:
+                batch_df.unpersist()
+
+    writer = (
+        df.writeStream.outputMode(mode)
+        .foreachBatch(write)
+        .option("checkpointLocation", checkpoint_path)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start(), sink
+
+
+def _windowed(df: DataFrame, config: GushSparkConfig, keys: list[str], aggs,
+              streaming: bool = True) -> DataFrame:
+    """Tumbling ``config.window_duration`` event-time aggregation of
+    ``aggs`` per ``keys`` (watermarked when streaming), the window
+    struct flattened to ``window_start``/``window_end``."""
+    if streaming:
+        df = df.withWatermark("warc_ts", config.watermark_delay)
+    agg = df.groupBy(F.window("warc_ts", config.window_duration), *keys).agg(*aggs)
+    return agg.select(
+        F.col("window.start").alias("window_start"),
+        F.col("window.end").alias("window_end"),
+        *agg.columns[1:],
+    )
+
+
+def _page_counts() -> list:
+    return [
+        F.count(F.lit(1)).alias("n_pages"),
+        F.sum(F.when(F.col("extract_error").isNotNull(), 1).otherwise(0)).alias("n_errors"),
+    ]
 
 
 def extracted_pages(
@@ -63,21 +125,7 @@ def extracted_pages(
 
 def windowed_host_counts(extracted: DataFrame, config: GushSparkConfig = DEFAULT_CONFIG,
                          streaming: bool = True) -> DataFrame:
-    df = extracted
-    if streaming:
-        df = df.withWatermark("warc_ts", config.watermark_delay)
-    agg = (
-        df.groupBy(F.window("warc_ts", config.window_duration), "host")
-        .agg(
-            F.count(F.lit(1)).alias("n_pages"),
-            F.sum(F.when(F.col("extract_error").isNotNull(), 1).otherwise(0)).alias("n_errors"),
-        )
-    )
-    return agg.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        "host", "n_pages", "n_errors",
-    )
+    return _windowed(extracted, config, ["host"], _page_counts(), streaming)
 
 
 def pages_pipeline(
@@ -96,20 +144,7 @@ def pages_pipeline(
     extracted = with_observed_metrics(extracted_pages(stream, config))
     agg = windowed_host_counts(extracted, config, streaming=True)
     sink = IdempotentKeyedSink(sink_path, keys=["host", "window_start"])
-
-    def write(batch_df, batch_id):
-        sink.write_batch(batch_df, batch_id)
-        if lineage_path:
-            partition_lineage(batch_df, batch_id, lineage_path)
-
-    writer = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(write)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return _run(agg, sink, checkpoint_path, available_now, lineage_path=lineage_path)
 
 
 def featurize_pipeline(
@@ -119,7 +154,7 @@ def featurize_pipeline(
     checkpoint_path: str,
     config: GushSparkConfig = DEFAULT_CONFIG,
     available_now: bool = True,
-    max_files_per_trigger: int | None = None,
+    lineage_path: str | None = None,
 ):
     """Scaling-bench flagship: pages stream → fused extract+featurize
     pandas UDF (quality/lang/fingerprints/minhash/simhash in one Arrow
@@ -132,48 +167,26 @@ def featurize_pipeline(
     (tools/bench_scaling.py)."""
     from gush_spark.functions.page_features import with_page_features
 
-    import dataclasses
-
-    mft = max_files_per_trigger or config.max_files_per_trigger
-    stream = read_input_stream(
-        spark, pages_path, dataclasses.replace(config, max_files_per_trigger=mft)
-    )
+    stream = read_input_stream(spark, pages_path, config)
     stream = stream.withColumn("host", host_of(F.col("url")))
     stream = blacklist_filter(stream, config)  # pushable, below the UDF
-    enriched = with_page_features(stream)
-    agg = (
-        enriched.withWatermark("warc_ts", config.watermark_delay)
-        .groupBy(F.window("warc_ts", config.window_duration), "host")
-        .agg(
-            F.count(F.lit(1)).alias("n_pages"),
-            F.sum(F.when(F.col("extract_error").isNotNull(), 1).otherwise(0)).alias("n_errors"),
-            # decimal sum → one double division: deterministic under any
-            # partitioning/accumulation order (double avg() is not — the
-            # N-vs-4N identical-output check would fail on FP order)
-            (
-                F.sum(F.col("quality_score").cast("decimal(18,6)")).cast("double")
-                / F.count("quality_score")
-            ).alias("avg_quality"),
-            F.min("fp60").alias("min_fp60"),
-            F.sum(F.element_at("minhash", 1)).alias("mh0_sum"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "host", "n_pages", "n_errors", "avg_quality", "min_fp60", "mh0_sum",
-        )
-    )
+    agg = _windowed(with_page_features(stream), config, ["host"], [
+        *_page_counts(),
+        # decimal sum → one double division: deterministic under any
+        # partitioning/accumulation order (double avg() is not — the
+        # N-vs-4N identical-output check would fail on FP order)
+        (
+            F.sum(F.col("quality_score").cast("decimal(18,6)")).cast("double")
+            / F.count("quality_score")
+        ).alias("avg_quality"),
+        F.min("fp60").alias("min_fp60"),
+        F.sum(F.element_at("minhash", 1)).alias("mh0_sum"),
+    ])
     sink = IdempotentKeyedSink(sink_path, keys=["host", "window_start"])
-    writer = (
-        # rollup output is small (hosts × coarse windows): one output
-        # file per batch keeps the sink's fixed cost off the scaling path
-        agg.writeStream.outputMode("update")
-        .foreachBatch(lambda df, bid: sink.write_batch(df.coalesce(1), bid))
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    # rollup output is small (hosts × coarse windows): one output file
+    # per batch keeps the sink's fixed cost off the scaling path
+    return _run(agg, sink, checkpoint_path, available_now,
+                lineage_path=lineage_path, step=lambda df: df.coalesce(1))
 
 
 def salted_rollup_pipeline(
@@ -184,6 +197,7 @@ def salted_rollup_pipeline(
     config: GushSparkConfig = DEFAULT_CONFIG,
     available_now: bool = True,
     salt_buckets: int | None = None,
+    lineage_path: str | None = None,
 ):
     """Skew-safe streaming rollup (north_rule: salted repartitioning on
     skewed hosts, in the streaming path).
@@ -203,28 +217,9 @@ def salted_rollup_pipeline(
     salted = extracted.withColumn(
         "salt", F.pmod(F.xxhash64(F.col("url")), F.lit(buckets))
     )
-    agg = (
-        salted.withWatermark("warc_ts", config.watermark_delay)
-        .groupBy(F.window("warc_ts", config.window_duration), "host", "salt")
-        .agg(
-            F.count(F.lit(1)).alias("n_pages"),
-            F.sum(F.when(F.col("extract_error").isNotNull(), 1).otherwise(0)).alias("n_errors"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "host", "salt", "n_pages", "n_errors",
-        )
-    )
+    agg = _windowed(salted, config, ["host", "salt"], _page_counts())
     sink = IdempotentKeyedSink(sink_path, keys=["host", "window_start", "salt"])
-    writer = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(lambda df, bid: sink.write_batch(df, bid))
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return _run(agg, sink, checkpoint_path, available_now, lineage_path=lineage_path)
 
 
 def read_salted_rollup(spark: SparkSession, sink: IdempotentKeyedSink) -> DataFrame:
@@ -319,6 +314,7 @@ def curation_stream_pipeline(
     lm_model=None,
     lm_min_logp: float = -7.0,
     gopher_gate: bool = False,
+    lineage_path: str | None = None,
 ):
     """Crawl-time corpus curation: pages stream → blacklist filters →
     vectorized extraction (optionally fused with mojibake repair) →
@@ -411,65 +407,50 @@ def curation_stream_pipeline(
     if bench_keys is not None and bench_bitmap is not None:
         raise ValueError("pass bench_keys OR bench_bitmap, not both")
 
-    def _gate(df, bid):
-        if bench_keys is None and bench_bitmap is None and lm_model is None:
-            sink.write_batch(df, bid)
-            return
+    def _gate(kept):
+        if lm_model is not None:
+            from gush_spark.operators.lm import lm_gate
 
-        # the microbatch lineage above (pandas-UDF extraction, dedup
-        # state, scrub regexes) is expensive — persist so every gate
-        # branch reads it once instead of recomputing it
-        df = df.persist()
-        try:
-            kept = df
-            if lm_model is not None:
-                from gush_spark.operators.lm import lm_gate
+            model, lm_ctx, vocab = lm_model
+            # fingerprint is the per-document key (dedup upstream
+            # guarantees uniqueness within the batch)
+            kept = lm_gate(
+                kept, model, lm_ctx, vocab, "fingerprint",
+                "extracted_text", min_mean_logp=lm_min_logp,
+            )
+        if bench_keys is not None or bench_bitmap is not None:
+            from gush_spark.operators.decontaminate import (
+                ngram_overlap,
+                ngram_overlap_bloom,
+            )
 
-                model, lm_ctx, vocab = lm_model
-                # fingerprint is the per-document key (dedup upstream
-                # guarantees uniqueness within the batch)
-                kept = lm_gate(
-                    kept, model, lm_ctx, vocab, "fingerprint",
-                    "extracted_text", min_mean_logp=lm_min_logp,
+            # gate on the unique content fingerprint, NOT url: two
+            # distinct-content pages sharing a url in one microbatch
+            # must be scored (and kept/dropped) per document,
+            # matching the batch operator's per-doc semantics
+            if bench_bitmap is not None:
+                scored = ngram_overlap_bloom(
+                    kept, bench_bitmap, "fingerprint", "extracted_text",
+                    threshold=contamination_threshold,
                 )
-            if bench_keys is not None or bench_bitmap is not None:
-                from gush_spark.operators.decontaminate import (
-                    ngram_overlap,
-                    ngram_overlap_bloom,
+            else:
+                scored = ngram_overlap(
+                    kept, None, "fingerprint", "extracted_text",
+                    threshold=contamination_threshold,
+                    bench_keys=bench_keys,
                 )
-
-                # gate on the unique content fingerprint, NOT url: two
-                # distinct-content pages sharing a url in one microbatch
-                # must be scored (and kept/dropped) per document,
-                # matching the batch operator's per-doc semantics
-                if bench_bitmap is not None:
-                    scored = ngram_overlap_bloom(
-                        kept, bench_bitmap, "fingerprint", "extracted_text",
-                        threshold=contamination_threshold,
-                    )
-                else:
-                    scored = ngram_overlap(
-                        kept, None, "fingerprint", "extracted_text",
-                        threshold=contamination_threshold,
-                        bench_keys=bench_keys,
-                    )
-                flags = scored.filter(F.col("contaminated")).select("fingerprint")
-                kept = kept.join(
-                    F.broadcast(flags), on="fingerprint", how="left_anti"
-                )
-            sink.write_batch(kept, bid)
-        finally:
-            df.unpersist()
+            flags = scored.filter(F.col("contaminated")).select("fingerprint")
+            kept = kept.join(F.broadcast(flags), on="fingerprint", how="left_anti")
+        return kept
 
     sink = IdempotentKeyedSink(sink_path, keys=[])  # append: curated rows
-    writer = (
-        curated.writeStream.outputMode("append")
-        .foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    # the microbatch plan above (pandas-UDF extraction, dedup state,
+    # scrub regexes) is expensive — a gated batch is persisted so every
+    # gate branch reads it once instead of recomputing it
+    gated = lm_model is not None or bench_keys is not None or bench_bitmap is not None
+    return _run(curated, sink, checkpoint_path, available_now, mode="append",
+                lineage_path=lineage_path, step=_gate if gated else None,
+                persist=gated)
 
 
 def start_independent_queries(
@@ -493,21 +474,20 @@ def start_independent_queries(
     ``fan_out`` foreachBatch (streaming/sink.py) is N source scans; the
     source being a replayable table (Iceberg/parquet) is exactly what
     makes this safe. Returns name -> (query, sink)."""
-    from gush_spark.streaming.source import read_page_events_stream
-
-    out = {}
-    for name, (transform, sink, mode) in specs.items():
-        stream = read_page_events_stream(spark, events_path, max_files_per_trigger)
-        df = transform(stream)
-        writer = (
-            df.writeStream.outputMode(mode)
-            .foreachBatch(sink.foreach_batch())
-            .option("checkpointLocation", f"{checkpoint_root}/{name}")
+    return {
+        name: _run(
+            transform(read_page_events_stream(spark, events_path, max_files_per_trigger)),
+            sink, f"{checkpoint_root}/{name}", available_now, mode=mode,
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        out[name] = (writer.start(), sink)
-    return out
+        for name, (transform, sink, mode) in specs.items()
+    }
+
+
+def _supported_events(spark: SparkSession, events_path: str, config: GushSparkConfig,
+                      max_files_per_trigger: int) -> DataFrame:
+    """Change-event stream behind the kind and blacklist filters (cep, state)."""
+    stream = read_page_events_stream(spark, events_path, max_files_per_trigger)
+    return blacklist_filter(supported_kinds_filter(stream), config)
 
 
 def cep_pipeline(
@@ -531,9 +511,7 @@ def cep_pipeline(
     the retention is sized here to COVER the pipeline's watermark
     delay: every event the watermark admits meets a still-live window
     counter (state stays bounded — retention·window is a constant)."""
-    stream = read_page_events_stream(spark, events_path, max_files_per_trigger)
-    stream = supported_kinds_filter(stream)
-    stream = blacklist_filter(stream, config)
+    stream = _supported_events(spark, events_path, config, max_files_per_trigger)
     if politeness_quota is not None:
         import math
 
@@ -560,20 +538,8 @@ def cep_pipeline(
     else:
         enriched = cep_enrich(stream, watermark_delay=config.watermark_delay)
     sink = IdempotentKeyedSink(sink_path, keys=[])  # append mode: every row kept
-
-    def write(batch_df, batch_id):
-        sink.write_batch(batch_df, batch_id)
-        if lineage_path:
-            partition_lineage(batch_df, batch_id, lineage_path)
-
-    writer = (
-        enriched.writeStream.outputMode("append")
-        .foreachBatch(write)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return _run(enriched, sink, checkpoint_path, available_now, mode="append",
+                lineage_path=lineage_path)
 
 
 # ---------------------------------------------------------------------------
@@ -605,18 +571,8 @@ def windowed_link_edges(
         html_col="_html_s",
         keep=("warc_ts",),
     )
-    if streaming:
-        links = links.withWatermark("warc_ts", config.watermark_delay)
-    agg = links.groupBy(
-        F.window("warc_ts", config.window_duration), "src_host", "dst_host"
-    ).agg(F.count(F.lit(1)).alias("n_links"))
-    return agg.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        "src_host",
-        "dst_host",
-        "n_links",
-    )
+    return _windowed(links, config, ["src_host", "dst_host"],
+                     [F.count(F.lit(1)).alias("n_links")], streaming)
 
 
 def link_graph_pipeline(
@@ -639,20 +595,7 @@ def link_graph_pipeline(
     sink = IdempotentKeyedSink(
         sink_path, keys=["src_host", "dst_host", "window_start"]
     )
-
-    def write(batch_df, batch_id):
-        sink.write_batch(batch_df, batch_id)
-        if lineage_path:
-            partition_lineage(batch_df, batch_id, lineage_path)
-
-    writer = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(write)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return _run(agg, sink, checkpoint_path, available_now, lineage_path=lineage_path)
 
 
 # ---------------------------------------------------------------------------
@@ -660,6 +603,17 @@ def link_graph_pipeline(
 # reference's home domain: a change stream folded to latest row state;
 # job.py --pipeline state)
 # ---------------------------------------------------------------------------
+def _latest_per_url(events: DataFrame) -> DataFrame:
+    """One row per url: its newest event by the struct-max argmax on
+    (warc_ts, event_id) — map-side combinable, no window."""
+    return (
+        events.groupBy("url")
+        .agg(F.max(F.struct("warc_ts", "event_id", "event_type", "host")).alias("s"))
+        .select("url", *(F.col(f"s.{c}").alias(c)
+                         for c in ("warc_ts", "event_id", "event_type", "host")))
+    )
+
+
 def latest_state_pipeline(
     spark: SparkSession,
     events_path: str,
@@ -682,46 +636,13 @@ def latest_state_pipeline(
     folds history with the same ordering. This is the gush
     binlog-to-table semantics (BinlogEvent → latest row) built on
     replayable offsets + idempotent MERGE instead of an actor chain."""
-    stream = read_page_events_stream(spark, events_path, max_files_per_trigger)
-    stream = supported_kinds_filter(stream)
-    stream = blacklist_filter(stream, config)
+    stream = _supported_events(spark, events_path, config, max_files_per_trigger)
     sink = IdempotentKeyedSink(
         sink_path, keys=["url"], resolve_order=["warc_ts", "event_id"]
     )
+    return _run(stream, sink, checkpoint_path, available_now,
+                lineage_path=lineage_path, step=_latest_per_url)
 
-    def write(batch_df, batch_id):
-        per_key = (
-            batch_df.groupBy("url")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("warc_ts"),
-                        F.col("event_id"),
-                        F.col("event_type"),
-                        F.col("host"),
-                    )
-                ).alias("s")
-            )
-            .select(
-                "url",
-                F.col("s.warc_ts").alias("warc_ts"),
-                F.col("s.event_id").alias("event_id"),
-                F.col("s.event_type").alias("event_type"),
-                F.col("s.host").alias("host"),
-            )
-        )
-        sink.write_batch(per_key, batch_id)
-        if lineage_path:
-            partition_lineage(per_key, batch_id, lineage_path)
-
-    writer = (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(write)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
 
 
 def read_page_state(spark: SparkSession, sink: IdempotentKeyedSink) -> DataFrame:
@@ -740,28 +661,8 @@ def batch_latest_state(
     argmax over the full event set — without the filters an
     unsupported-kind or ignored-host event could become a url's
     'current' state here while the stream never saw it."""
-    events = blacklist_filter(supported_kinds_filter(events), config)
-    return (
-        events.groupBy("url")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("warc_ts"),
-                    F.col("event_id"),
-                    F.col("event_type"),
-                    F.col("host"),
-                )
-            ).alias("s")
-        )
-        .select(
-            "url",
-            F.col("s.warc_ts").alias("warc_ts"),
-            F.col("s.event_id").alias("event_id"),
-            F.col("s.event_type").alias("event_type"),
-            F.col("s.host").alias("host"),
-            (F.col("s.event_type") != "drop").alias("is_active"),
-        )
-    )
+    latest = _latest_per_url(blacklist_filter(supported_kinds_filter(events), config))
+    return latest.withColumn("is_active", F.col("event_type") != "drop")
 
 
 # ---------------------------------------------------------------------------
@@ -803,17 +704,5 @@ def sample_pipeline(
     sink = IdempotentKeyedSink(
         sink_path, keys=["window_start_us", "shard", "url"]
     )
-
-    def write(batch_df, batch_id):
-        sink.write_batch(batch_df, batch_id)
-        if lineage_path:
-            partition_lineage(batch_df, batch_id, lineage_path)
-
-    writer = (
-        cands.writeStream.outputMode("append")
-        .foreachBatch(write)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return _run(cands, sink, checkpoint_path, available_now, mode="append",
+                lineage_path=lineage_path)

@@ -113,11 +113,14 @@ def _merge_topk(
             + list(pdf["priority"].astype("int64")),
         }
     )
-    # one url may recur across batches (replays) — keep one copy; the
-    # priority is a pure function of the url so copies agree
+    # one url may recur (replays, or recrawls at another weight) — keep
+    # its lowest-priority copy. The priority depends on the weight as
+    # well as the url, so copies can disagree: sorting before the dedupe
+    # (weight breaks a priority tie) makes the kept copy independent of
+    # arrival order
     frame = (
-        frame.drop_duplicates(subset=["url"])
-        .sort_values(["priority", "url"], kind="stable")
+        frame.sort_values(["priority", "url", "weight"], kind="stable")
+        .drop_duplicates(subset=["url"])
         .head(k)
     )
     return (

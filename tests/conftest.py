@@ -1,3 +1,4 @@
+import json
 import sys
 from pathlib import Path
 
@@ -24,3 +25,26 @@ def tmp_dirs(tmp_path):
         "data": str(tmp_path / "data"),
         "lineage": str(tmp_path / "lineage.jsonl"),
     }
+
+
+@pytest.fixture()
+def assert_lineage_per_batch():
+    """Checks a pipeline's lineage file against its sink: exactly one
+    ``partition_lineage`` record per committed batch, whose
+    ``total_rows`` is the row count that batch committed."""
+
+    def check(sink, lineage_path):
+        records = [
+            json.loads(line)
+            for line in Path(lineage_path).read_text().splitlines()
+        ]
+        records = [r for r in records if r["kind"] == "partition_lineage"]
+        committed = {
+            b: json.loads((sink.root / "_commits" / str(b)).read_text())["rows"]
+            for b in sink.committed_batches()
+        }
+        assert committed
+        assert sorted(r["batch_id"] for r in records) == sorted(committed)
+        assert {r["batch_id"]: r["total_rows"] for r in records} == committed
+
+    return check

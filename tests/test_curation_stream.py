@@ -25,14 +25,18 @@ def pages_dir(tmp_path):
     return str(d)
 
 
-def test_curation_stream_matches_batch_gates(spark, pages_dir, tmp_dirs):
+def test_curation_stream_matches_batch_gates(
+    spark, pages_dir, tmp_dirs, assert_lineage_per_batch
+):
     # the synthetic fixture vocabulary scores as 'de' under the
     # stopword-profile language model — gate on that, not on 'en'
     query, sink = curation_stream_pipeline(
         spark, pages_dir, tmp_dirs["sink"], tmp_dirs["checkpoint"],
         config=CFG, available_now=True, quality_threshold=0.3, lang="de",
+        lineage_path=tmp_dirs["lineage"],
     )
     query.awaitTermination(180)
+    assert_lineage_per_batch(sink, tmp_dirs["lineage"])
     got = sink.read_all_appends(spark).toPandas()
 
     # batch reference: same extraction, same gates, dedup on fingerprint
@@ -64,7 +68,9 @@ def test_curation_stream_matches_batch_gates(spark, pages_dir, tmp_dirs):
     assert again == len(got)
 
 
-def test_curation_stream_scrub_and_decontaminate(spark, tmp_path, tmp_dirs):
+def test_curation_stream_scrub_and_decontaminate(
+    spark, tmp_path, tmp_dirs, assert_lineage_per_batch
+):
     """PII scrub + benchmark-decontamination gates composed into the
     streaming pipeline: scrubbed text lands in the sink, contaminated
     pages don't, and the surviving fingerprint set equals the batch
@@ -115,8 +121,11 @@ def test_curation_stream_scrub_and_decontaminate(spark, tmp_path, tmp_dirs):
         spark, str(d), tmp_dirs["sink"], tmp_dirs["checkpoint"],
         config=CFG, available_now=True, quality_threshold=0.0, lang="en",
         scrub=True, bench_keys=keys, contamination_threshold=0.5,
+        lineage_path=tmp_dirs["lineage"],
     )
     query.awaitTermination(180)
+    # gated batches: lineage counts the rows the gates let through
+    assert_lineage_per_batch(sink, tmp_dirs["lineage"])
     got = sink.read_all_appends(spark).toPandas()
 
     by_url = {u.rsplit("/", 1)[1]: r for u, r in zip(got["url"], got.to_dict("records"))}

@@ -75,3 +75,82 @@ def test_recrawl_topk_rejected_off_cep():
 def test_recrawl_topk_rejected_with_continuous():
     with pytest.raises(SystemExit):
         main(["--pipeline", "cep", *BASE, "--recrawl-topk", "5", "--continuous"])
+
+
+# Which pipelines accept each pipeline-specific flag, and the pipeline
+# kwargs it sets there — written out here, not read from job.py, so a
+# change to the flag table has to change this list too.
+ALL_PIPELINES = ("pages", "featurize", "cep", "salted", "curation",
+                 "linkgraph", "state", "sample")
+PAGE_PIPELINES = {"pages", "featurize", "salted", "curation", "linkgraph",
+                  "sample"}
+FLAG_PIPELINES = [
+    (["--input-format", "warc"], PAGE_PIPELINES, set()),
+    (["--scrub"], {"curation"}, {"scrub"}),
+    (["--scrub", "--max-pii", "2"], {"curation"}, {"scrub", "max_pii"}),
+    (["--bench-keys", "k.parquet"], {"curation"}, {"bench_keys"}),
+    (["--bench-bloom", "b.parquet"], {"curation"}, {"bench_bitmap"}),
+    (["--quality-threshold", "0.7"], {"curation"}, {"quality_threshold"}),
+    (["--lang", "de"], {"curation"}, {"lang"}),
+    (["--fix-encoding"], {"curation"}, {"fix_encoding"}),
+    (["--lm-ref", "ref.parquet"], {"curation"}, {"lm_model"}),
+    (["--lm-ref", "ref.parquet", "--lm-min-logp", "-6.5"], {"curation"},
+     {"lm_model", "lm_min_logp"}),
+    (["--gopher-gate"], {"curation"}, {"gopher_gate"}),
+    (["--politeness-quota", "3"], {"cep"}, {"politeness_quota"}),
+    (["--sample-k", "8"], {"sample"}, {"sample_k"}),
+    (["--anomaly-k", "3"], {"pages", "featurize"}, set()),
+    (["--recrawl-topk", "5"], {"cep"}, set()),
+]
+ALWAYS = {"sink_path", "checkpoint_path", "config", "available_now", "lineage_path"}
+
+
+@pytest.fixture()
+def started(monkeypatch):
+    """Fakes for the session, every pipeline and the post-drain reports:
+    returns the list of kwargs each started pipeline received."""
+    from unittest import mock
+
+    import gush_spark.job as job
+    import gush_spark.operators.lm as lm
+    import gush_spark.streaming.pipeline as pipeline
+
+    calls = []
+
+    def fake_pipeline(spark, input_path, **kwargs):
+        calls.append(kwargs)
+        return mock.MagicMock(), mock.MagicMock()
+
+    for name in job.PIPELINES:
+        monkeypatch.setitem(job.PIPELINES, name, fake_pipeline)
+    monkeypatch.setattr(job, "build_cluster_session", lambda app: mock.MagicMock())
+    monkeypatch.setattr(lm, "train_bigram_lm", lambda ref, *cols: ("lm", ref))
+    for report in ("read_host_anomalies", "read_recrawl_priorities"):
+        monkeypatch.setattr(pipeline, report, mock.MagicMock())
+    return calls
+
+
+@pytest.mark.parametrize("pipeline", ALL_PIPELINES)
+@pytest.mark.parametrize(
+    "flags,pipelines,kwargs", FLAG_PIPELINES,
+    ids=[" ".join(f[0]) for f in FLAG_PIPELINES],
+)
+def test_flag_applies_only_to_its_pipelines(started, pipeline, flags, pipelines, kwargs):
+    argv = ["--pipeline", pipeline, *BASE, *flags]
+    if pipeline not in pipelines:
+        with pytest.raises(SystemExit):
+            main(argv)
+        assert started == []
+        return
+    assert main(argv) == 0
+    assert len(started) == 1
+    assert set(started[0]) == ALWAYS | kwargs
+    if "--input-format" in flags:
+        assert started[0]["config"].input_format == "warc"
+
+
+@pytest.mark.parametrize("pipeline", ALL_PIPELINES)
+def test_lineage_reaches_every_pipeline(started, pipeline, tmp_path):
+    lineage = str(tmp_path / "lineage.jsonl")
+    assert main(["--pipeline", pipeline, *BASE, "--lineage", lineage]) == 0
+    assert started[0]["lineage_path"] == lineage

@@ -24,11 +24,14 @@ class TestResourceAllocation:
 
         # 1-2-3-4 path: the only 2-hop non-edges are (1,3) via 2 and
         # (2,4) via 3, each through one middle of degree 2.
+        cached = spark.sparkContext._jsc.getPersistentRDDs().size()
         out = resource_allocation(
             _edges(spark, [("1", "2"), ("2", "3"), ("3", "4")])
         ).collect()
         got = {(r.id_a, r.id_b): (r.common_neighbors, r.ra_x1e9) for r in out}
         assert got == {("1", "3"): (1, 500_000_000), ("2", "4"): (1, 500_000_000)}
+        # no cached frame outlives the call
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() <= cached
 
     def test_square_sums_common_neighbors(self, spark):
         from gush_spark.operators.graph import resource_allocation
@@ -608,6 +611,24 @@ class TestCubeEventStats:
         for r in rows:
             if r.event_type != "ALL" and r.day_bucket == "ALL":
                 assert r.n_events == by_type[r.event_type]
+
+    def test_null_key_is_not_a_margin(self, spark, tmp_path):
+        import datetime as dt
+
+        import gush_spark.queries as q
+
+        # a NULL event type is a data cell; coalesce(…, 'ALL') used to
+        # label it as the per-day margin and so duplicate that row
+        spark.createDataFrame(
+            [("crawl", dt.datetime(2024, 1, 1, 5), 1.0),
+             (None, dt.datetime(2024, 1, 1, 6), 2.0)],
+            "event_type string, ts timestamp, value double",
+        ).write.parquet(str(tmp_path / "events.parquet"))
+        rows = q.q_cube_event_stats(spark, str(tmp_path)).collect()
+        labels = [(r.event_type, r.day_bucket) for r in rows]
+        assert len(labels) == len(set(labels))
+        assert labels.count(("ALL", "ALL")) == 1
+        assert sum(1 for t, _ in labels if t is None) == 2  # its day + its margin
 
 
 class TestRendezvous:

@@ -222,3 +222,33 @@ def test_job_cli_sample_flag_validation():
             "--input", "/tmp/x", "--sink", "/tmp/y",
             "--checkpoint", "/tmp/z",
         ])
+
+
+def test_merge_keeps_same_copy_in_any_arrival_order():
+    """A url recrawled at another weight in the same window has two
+    priorities; the merge must keep the same copy whichever arrives
+    first, in one batch or across two."""
+    from gush_spark.streaming.sampling import _merge_topk
+
+    def rows(*copies):
+        return pd.DataFrame(
+            {
+                "url": [u for u, _ in copies],
+                "weight": [w for _, w in copies],
+                "priority": [(1 << 40) // w for _, w in copies],
+            }
+        )
+
+    light, heavy = ("https://h.example/a", 10), ("https://h.example/a", 1000)
+    other = ("https://h.example/b", 50)
+    empty = ([], [], [])
+    outs = [
+        _merge_topk(rows(light, heavy, other), empty, K),
+        _merge_topk(rows(heavy, light, other), empty, K),
+        _merge_topk(rows(heavy), _merge_topk(rows(light, other), empty, K), K),
+        _merge_topk(rows(light), _merge_topk(rows(heavy, other), empty, K), K),
+    ]
+    assert all(out == outs[0] for out in outs)
+    # the heavier copy has the lower priority, so it is the one kept
+    assert outs[0][0].count("https://h.example/a") == 1
+    assert outs[0][1][outs[0][0].index("https://h.example/a")] == 1000

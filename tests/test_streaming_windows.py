@@ -3,6 +3,8 @@ windowed output must equal the batch computation on the same input, and
 late rows must be dropped deterministically by the watermark.
 """
 
+import json
+
 import pandas as pd
 import pytest
 
@@ -65,7 +67,9 @@ def test_late_rows_dropped_with_tight_watermark(spark, pages_dir, tmp_dirs):
     assert got_total < full_total
 
 
-def test_salted_rollup_equals_unsalted(spark, pages_dir, tmp_dirs):
+def test_salted_rollup_equals_unsalted(
+    spark, pages_dir, tmp_dirs, assert_lineage_per_batch
+):
     """Skew salting must not change results: the merged salted partials
     equal the plain batch rollup on the same input (north_rule: skew
     handled explicitly, provably semantics-preserving)."""
@@ -77,9 +81,10 @@ def test_salted_rollup_equals_unsalted(spark, pages_dir, tmp_dirs):
     query, sink = salted_rollup_pipeline(
         spark, pages_dir, tmp_dirs["sink"] + "_salted",
         tmp_dirs["checkpoint"] + "_salted", config=CFG, available_now=True,
-        salt_buckets=4,
+        salt_buckets=4, lineage_path=tmp_dirs["lineage"],
     )
     query.awaitTermination(180)
+    assert_lineage_per_batch(sink, tmp_dirs["lineage"])
 
     partials = sink.read(spark).toPandas()
     assert partials.salt.nunique() > 1  # the hot key really was split
@@ -95,5 +100,34 @@ def test_salted_rollup_equals_unsalted(spark, pages_dir, tmp_dirs):
     pd.testing.assert_frame_equal(
         got_s[key + ["n_pages", "n_errors"]],
         exp_s[key + ["n_pages", "n_errors"]],
+        check_dtype=False,
+    )
+
+
+def test_featurize_counts_equal_batch(
+    spark, pages_dir, tmp_dirs, assert_lineage_per_batch
+):
+    """The featurize rollup counts the same pages per (host, window) as
+    the batch twin of the pages pipeline, and its lineage records each
+    committed batch."""
+    from gush_spark.streaming.pipeline import featurize_pipeline
+
+    query, sink = featurize_pipeline(
+        spark, pages_dir, tmp_dirs["sink"], tmp_dirs["checkpoint"],
+        config=CFG, available_now=True, lineage_path=tmp_dirs["lineage"],
+    )
+    query.awaitTermination(180)
+    assert_lineage_per_batch(sink, tmp_dirs["lineage"])
+    with open(tmp_dirs["lineage"]) as f:  # coalesced: one partition at most
+        assert all(len(json.loads(line)["partitions"]) <= 1 for line in f)
+
+    got = sink.read(spark).toPandas()
+    batch = windowed_host_counts(
+        extracted_pages(read_pages_batch(spark, pages_dir), CFG), CFG, streaming=False
+    ).toPandas()
+    key = ["window_start", "host"]
+    pd.testing.assert_frame_equal(
+        got.sort_values(key).reset_index(drop=True)[key + ["n_pages"]],
+        batch.sort_values(key).reset_index(drop=True)[key + ["n_pages"]],
         check_dtype=False,
     )
