@@ -11,16 +11,19 @@ operators/featurize.py: Spark evaluates higher-order array lambdas
 boxing through BoxesRunTime/PhysicalDataType (confirmed via jstack) —
 whose memory traffic stops scaling beyond ~8 threads in one JVM.
 Arrow-batched Python workers are separate processes and scale like the
-hardware allows. The JVM featurize remains the oracle-parity /
-small-batch path; this UDF is what the streaming featurization pipeline
-runs at scale. Same feature *semantics*, different hash backend
-(crc32), so values differ between the two implementations by design.
+hardware allows. This UDF is the only streaming and scale featurizer;
+operators/featurize.py stays only as the md5 oracle-parity path behind
+the ``doc_featurize`` catalog query. Same formulas (for non-empty
+text quality_score and pred_lang agree value for value; empty text gets
+null features here), different hash backend (crc32), so the hash
+columns differ between the two implementations by design.
 """
 
 from __future__ import annotations
 
 import re
 import zlib
+from decimal import ROUND_HALF_UP, Decimal
 from typing import Iterator
 
 import numpy as np
@@ -46,6 +49,7 @@ _STOP_SETS = {lang: frozenset(ws) for lang, ws in sorted(STOPWORDS.items())}
 _LANGS = sorted(STOPWORDS)
 _A = np.array(MINHASH_A, dtype=np.int64)[:, None]
 _B = np.array(MINHASH_B, dtype=np.int64)[:, None]
+_MICRO = Decimal("1e-6")
 
 PAGE_FEATURES_SCHEMA = T.StructType(
     [
@@ -68,6 +72,13 @@ def _crc(s: str) -> int:
     return zlib.crc32(s.encode("utf-8"))
 
 
+def _round6(x: float) -> float:
+    """Half-up on the shortest decimal form, as Spark's and DuckDB's
+    ``round(x, 6)`` do; Python's ``round`` goes half-even on the binary
+    value and differs on ties."""
+    return float(Decimal(repr(x)).quantize(_MICRO, ROUND_HALF_UP))
+
+
 def featurize_text(text: str) -> tuple:
     """(quality, pred_lang, fp60, rolling_fp, minhash, simhash, norm)
     for one document — same formulas as the JVM featurize, crc32 hash
@@ -85,12 +96,11 @@ def featurize_text(text: str) -> tuple:
     punct = len(_PUNCT_RE.findall(norm)) / n_chars
     stop_en = len(distinct & _STOP_SETS["en"]) / nd
     dr = nd / n
-    quality = round(
+    quality = _round6(
         0.25 * min(mtl / 8.0, 1.0)
         + 0.25 * (1.0 - min(punct * 4.0, 1.0))
         + 0.25 * min(stop_en * 5.0, 1.0)
-        + 0.25 * dr,
-        6,
+        + 0.25 * dr
     )
 
     scores = [len(distinct & _STOP_SETS[lang]) / nd for lang in _LANGS]

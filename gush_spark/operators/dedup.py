@@ -355,11 +355,10 @@ def containment_pairs(
     Set sizes (intersection/union/each side) are unchanged absent a
     60-bit collision, so containment/jaccard values are identical — a
     collision could only ADD a candidate or merge two set elements,
-    both astronomically unlikely; the oracle query
+    both astronomically unlikely; the catalog query
     ``containment_pairs_hashed`` pins hash-equality with the
-    string-keyed SQL and test_pipeline_ops pins set-equality of both
-    forms. The string-keyed default stays oracle-pinned so candidate
-    sets match DuckDB exactly."""
+    string-keyed DuckDB oracle, and test_pipeline_ops pins set-equality
+    with the string-keyed default, kept as the reference form."""
     from gush_spark.operators.skew import cap_hot_buckets
 
     def _h(col: Column) -> Column:

@@ -1,17 +1,18 @@
-"""Single-pass page featurization — the per-record enrichment a crawl
-pipeline runs on every page: quality features, language scores,
-fingerprints, and a per-row MinHash signature.
+"""Single-pass page featurization in the JVM with md5 hashes — the
+oracle-parity featurizer behind the ``doc_featurize`` catalog query:
+quality features, language scores, fingerprints, and a per-row MinHash
+signature, every hash reproducible bit-for-bit by DuckDB's md5.
 
-Everything is a narrow column expression (no explode, no shuffle, no
-Python): the words/shingles/hashes arrays are materialized once per row
-as intermediate projections, and every downstream lambda references the
-*bound* column — Catalyst does not CSE into lambda bodies, so binding
-is what keeps this single-pass (see dedup.shingles for the measured
-penalty of getting that wrong).
+Everything but the md5 stage is a narrow column expression (no explode,
+no shuffle): the words/shingles/hashes arrays are materialized once per
+row as intermediate projections, and every downstream lambda references
+the *bound* column — Catalyst does not CSE into lambda bodies, so
+binding is what keeps this single-pass (see dedup.shingles for the
+measured penalty of getting that wrong).
 
-This is the CPU payload of the scaling bench (tools/bench_scaling.py):
-a shuffle-free map stage whose throughput should scale linearly with
-cores, which is exactly what the N-vs-4N efficiency criterion measures.
+The streaming and scale featurizer is the fused Arrow UDF in
+functions/page_features.py (crc32 hashes, same formulas); this module
+exists for the hash-exact cross-engine contract.
 """
 
 from __future__ import annotations
@@ -68,30 +69,20 @@ def _md5_hash_cols(norm: pd.Series, ws: pd.Series, sh: pd.Series) -> pd.DataFram
     return pd.DataFrame({"h": h_out, "fp60": fp_out, "rolling_fp": roll_out})
 
 
-def featurize(
-    df: DataFrame, text_col: str, minhash_k: int = MINHASH_K,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
+def featurize(df: DataFrame, text_col: str, hash_fn: str = "md5_arrow") -> DataFrame:
     """Append quality/lang/fingerprint/minhash columns in one projection
-    chain. Null/empty text rows get null features (error rows from the
+    chain. Null text rows get null features (error rows from the
     extractor flow through untouched — P10 error-channel convention).
 
-    ``hash_fn`` picks the hash backend:
-    - ``"xxhash64"`` (default, the scale path): pure-JVM, lock-free.
-      Spark's md5 expression calls MessageDigest.getInstance per value —
-      a synchronized provider lookup that convoys under many cores
-      (measured: the minhash column burned 15x more CPU per page at 32
-      threads than at 8).
-    - ``"md5"``: cross-engine parity mode — DuckDB reproduces md5
-      bit-for-bit, so hash-exact oracles are possible. Values differ
-      from the xxhash64 backend; semantics (uniform hashing) are the
-      same.
-    - ``"md5_arrow"``: the SAME md5 values computed in one vectorized
-      Arrow stage (hashlib per python worker process — no shared JVM
-      lock), sidestepping the MessageDigest convoy while keeping oracle
-      parity. The oracle-checked catalog query uses this; "md5" remains
-      the all-JVM reference the equality test pins it against.
+    ``hash_fn`` picks where the md5 values are computed:
+    - ``"md5_arrow"`` (default): one vectorized Arrow stage (hashlib per
+      python worker process — no shared JVM lock), sidestepping the
+      MessageDigest convoy of Spark's md5 expression.
+    - ``"md5"``: the all-JVM reference the equality test pins
+      ``"md5_arrow"`` against.
     """
+    if hash_fn not in ("md5_arrow", "md5"):
+        raise ValueError(f"hash_fn must be 'md5_arrow' or 'md5', got {hash_fn!r}")
     norm = ta.norm_text(F.col(text_col))
     with_norm = df.withColumn("_norm", norm).withColumn(
         "_ws", F.split(F.col("_norm"), " ")
@@ -111,20 +102,15 @@ def featurize(
         roll_col = F.col("_md5c.rolling_fp")
         extra_drop = ["_md5c"]
     else:
-        if hash_fn == "md5":
-            _h32 = lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
-            _h60 = lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-            _h28 = ta.word_hash28
-        else:
-            _h32 = lambda s: F.pmod(F.xxhash64(s), F.lit(4294967296).cast("long"))
-            _h60 = lambda s: F.pmod(F.xxhash64(s), F.lit(1 << 60).cast("long"))
-            _h28 = lambda s: F.pmod(F.xxhash64(s), F.lit(1 << 28).cast("long"))
-        with_h = with_sh.withColumn("_h", F.transform(F.col("_sh"), _h32))
-        fp60_col = _h60(F.col("_norm"))
+        _md5_int = lambda s, n: F.conv(F.substring(F.md5(s), 1, n), 16, 10).cast("long")
+        with_h = with_sh.withColumn(
+            "_h", F.transform(F.col("_sh"), lambda s: _md5_int(s, 8))
+        )
+        fp60_col = _md5_int(F.col("_norm"), 15)
         roll_col = F.aggregate(
             F.col("_ws"),
             F.lit(0).cast("long"),
-            lambda acc, w: (acc * F.lit(ta.ROLL_MUL) + _h28(w))
+            lambda acc, w: (acc * F.lit(ta.ROLL_MUL) + ta.word_hash28(w))
             % F.lit(ta.ROLL_MOD),
         )
         extra_drop = []
@@ -139,7 +125,7 @@ def featurize(
                 % F.lit(MINHASH_P),
             )
         ).alias(f"mh{j}")
-        for j in range(minhash_k)
+        for j in range(MINHASH_K)
     ]
     return with_h.select(
         "*",

@@ -482,7 +482,7 @@ def triangle_counts(
     here. The closing-edge join is a two-column equi-join (hash, never
     nested-loop; pinned by the plan audit).
     """
-    e = edges.select("id_a", "id_b").distinct().persist()
+    e = edges.select("id_a", "id_b").distinct()
     deg = (
         e.select(F.col("id_a").alias("node"))
         .unionByName(e.select(F.col("id_b").alias("node")))
@@ -541,12 +541,7 @@ def reciprocity(
     Scale shape: one distinct pass, one self-equi-join on the reversed
     (src, dst) pair (hash join, two-column key), three
     map-side-combinable degree aggs — node ids only on the wire."""
-    d = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .persist()
-    )
+    d = edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct()
     outs = d.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("out_deg")
     )

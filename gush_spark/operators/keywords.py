@@ -346,8 +346,8 @@ def collocation_lift(
     ``lift_scaled = c_xy · T · scale div (c_x· · c_·y)`` where the
     margins are the bigram table's own row/column sums (so they add to
     ``T`` exactly). The "what multi-word units does this corpus
-    repeat" report a curator reads next to frequent_phrases (raw
-    counts) and bpe_pair_stats (merge candidates) — lift surfaces
+    repeat" report a curator reads next to frequent_phrases_hashed
+    (raw counts) and bpe_pair_stats (merge candidates) — lift surfaces
     pairs that are *bound* to each other, not merely common.
 
     Scale shape:

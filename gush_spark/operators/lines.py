@@ -7,7 +7,7 @@ remaining lines keep their original order.
 This is cross-document state (a single doc can't know its line is a
 template), which distinguishes it from the per-doc repetition scores
 (operators/repetition.py) and the n-gram phrase miner
-(queries_pipeline.frequent_phrases).
+(queries_pipeline.frequent_phrases_hashed).
 
 Scale design (100 TB):
 - the frequency stages shuffle ONLY line md5 keys (doc-frequency per

@@ -376,7 +376,8 @@ def ivfpq_topk(
 
     Output ``(query_id, neighbor_id, adc_dist, rank)`` — integer
     distances, nearest first, ties to the smallest id, candidates
-    limited to probed cells (IVF recall semantics, like ``ivf_topk``).
+    limited to probed cells (IVF recall semantics, like
+    ``similarity.kmeans_ivf_topk``).
 
     Determinism: cell probing reuses the assignment's integer-dot
     score (monotone in cosine); residuals are ``x − rep`` in doubles

@@ -192,41 +192,20 @@ def lsh_topk_multiprobe(
     return lsh_topk(vectors, queries, id_col, vec_col, k, n_bits, multiprobe=True)
 
 
-def ivf_representatives(
-    vectors: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
-    """Deterministic IVF coarse quantizer: one representative vector per
-    cell (the lowest-id member). A trained k-means centroid would be the
-    production upgrade; a fixed representative keeps the structure —
-    probe cells by representative similarity, search only inside them —
-    while staying bit-reproducible for the oracle (float means are
-    accumulation-order-dependent; min-id selection is not)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(label_col).orderBy(F.col(id_col))
-    return (
-        vectors.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(F.col(label_col).alias("cell"), F.col(vec_col).alias("rep_vec"))
-    )
-
-
 def _ivf_search(
     labeled: DataFrame,
     reps: DataFrame,
     queries: DataFrame,
     id_col: str,
     vec_col: str,
-    label_col: str,
     k: int,
     n_probe: int,
 ) -> DataFrame:
-    """Shared IVF probe + in-cell exact search: queries score the (tiny,
-    broadcast) representatives, keep their best ``n_probe`` cells, then
-    rank exact cosine against only those cells' members (one
-    cell-membership semi-join — fan-in is the probed fraction of the
-    corpus, never all of it)."""
+    """IVF probe + in-cell exact search over a corpus labeled by cell in
+    ``_cell``: queries score the (tiny, broadcast) representatives, keep
+    their best ``n_probe`` cells, then rank exact cosine against only
+    those cells' members (one cell-membership semi-join — fan-in is the
+    probed fraction of the corpus, never all of it)."""
     from pyspark.sql import Window
 
     reps = reps.withColumn("rep_norm", l2_norm(F.col("rep_vec")))
@@ -255,7 +234,7 @@ def _ivf_search(
     )
     v = labeled.withColumn("v_norm", l2_norm(F.col(vec_col)))
     scored = (
-        v.join(F.broadcast(probed), v[label_col] == probed["cell"])
+        v.join(F.broadcast(probed), v["_cell"] == probed["cell"])
         .filter(F.col(id_col) != F.col("query_id"))
         .select(
             "query_id",
@@ -269,25 +248,6 @@ def _ivf_search(
         )
     )
     return _rank_topk(scored, k)
-
-
-def ivf_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    k: int = 5,
-    n_probe: int = 2,
-) -> DataFrame:
-    """IVF-style ANN over PRE-LABELED cells (min-id representatives):
-    each query probes the ``n_probe`` cells whose representatives score
-    highest, then ranks exact cosine within those cells only. The
-    TRAINED-quantizer upgrade is ``kmeans_ivf_topk``."""
-    reps = ivf_representatives(vectors, id_col, vec_col, label_col)
-    return _ivf_search(
-        vectors, reps, queries, id_col, vec_col, label_col, k, n_probe
-    )
 
 
 # centroid coordinates are quantized to integers for the k-means update:
@@ -465,11 +425,10 @@ def kmeans_ivf_topk(
 ) -> DataFrame:
     """IVF ANN with a TRAINED coarse quantizer: cells and their centroid
     representatives come from deterministic k-means (``kmeans_cells``)
-    instead of a pre-existing label column — the production form of
-    ``ivf_topk`` (centroids track the data's density, so probing the
-    best ``n_probe`` cells recovers more true neighbors than arbitrary
-    labels with min-id representatives; the recall comparison is pinned
-    in tests/test_ann.py)."""
+    instead of a pre-existing label column (centroids track the data's
+    density, so probing the best ``n_probe`` cells recovers most true
+    neighbors; recall against brute force is pinned in
+    tests/test_ann.py)."""
     labeled, centroids = kmeans_ivf_build(
         vectors, id_col, vec_col, n_cells=n_cells, iters=iters
     )
@@ -510,9 +469,7 @@ def kmeans_ivf_query(
     """Probe half of ``kmeans_ivf_topk`` against a built (possibly
     materialized-and-reloaded) index: broadcast-score the centroids,
     keep ``n_probe`` cells, exact cosine within those cells only."""
-    return _ivf_search(
-        labeled, centroids, queries, id_col, vec_col, "_cell", k, n_probe
-    )
+    return _ivf_search(labeled, centroids, queries, id_col, vec_col, k, n_probe)
 
 
 def cosine_near_dup_pairs(

@@ -436,33 +436,8 @@ _JEDGES = (
 )
 
 
-@query(
-    "containment_pairs",
-    oracle=f"""
-    WITH {BASE}, {WORDS}, {SHINGLES},
-    shl AS (SELECT doc_id, {SHINGLE_LIST} AS shs FROM w WHERE len(ws) >= 3),
-    cand AS (
-      SELECT x.doc_id AS id_a, y.doc_id AS id_b
-      FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-      GROUP BY 1, 2
-      HAVING count(*) >= 2)
-    SELECT id_a, id_b,
-           CAST(len(list_intersect(x.shs, y.shs)) AS DOUBLE)
-             / len(x.shs) AS containment_a,
-           CAST(len(list_intersect(x.shs, y.shs)) AS DOUBLE)
-             / len(y.shs) AS containment_b,
-           CAST(len(list_intersect(x.shs, y.shs)) AS DOUBLE)
-             / len(list_distinct(list_concat(x.shs, y.shs))) AS jaccard
-    FROM cand JOIN shl x ON x.doc_id = id_a JOIN shl y ON y.doc_id = id_b
-    """,
-)
-def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return dedup.containment_pairs(docs, "doc_id", "text", threshold=0.0, spread=None)
-
-
-# the crawl-scale variant: inverted-index join keyed by the shingle's
-# 60-bit md5 prefix (8-byte longs on the shuffle wire instead of raw
+# asymmetric containment at crawl scale: inverted-index join keyed by
+# the shingle's 60-bit md5 prefix (8-byte longs on the shuffle wire instead of raw
 # n-gram strings). Oracle = the SAME string-keyed SQL: the exact
 # set-verify stage absorbs hash collisions, so hash-equality here PROVES
 # the hashed blocking loses/adds nothing on this corpus.
@@ -609,10 +584,7 @@ def q_doc_featurize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gush_spark.operators.featurize import featurize
 
     docs = load(spark, sf_dir, "documents")
-    # md5_arrow: identical md5 values, computed Arrow-side — avoids the
-    # JVM MessageDigest convoy (operators/featurize.py) while keeping
-    # DuckDB parity; pinned equal to the all-JVM "md5" backend in tests
-    out = featurize(docs, "text", hash_fn="md5_arrow")
+    out = featurize(docs, "text")
     return out.select(
         "doc_id", "quality_score", "fp60", "rolling_fp",
         F.element_at("minhash", 1).alias("mh_first"),
@@ -863,46 +835,6 @@ def q_ann_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = load(spark, sf_dir, "embeddings")
     queries_df = vecs.filter(F.col("vec_id") < 8)
     out = similarity.lsh_topk_multiprobe(vecs, queries_df, k=5)
-    return out.select(
-        "query_id", "neighbor_id", "score", F.col("rank").cast("long").alias("rank")
-    )
-
-
-@query(
-    "ann_topk_ivf",
-    oracle=f"""
-    WITH reps AS (
-      SELECT label AS cell, embedding AS rep_vec FROM (
-        SELECT label, embedding,
-               row_number() OVER (PARTITION BY label ORDER BY vec_id) AS rn
-        FROM embeddings) WHERE rn = 1),
-    q AS (SELECT vec_id AS query_id, embedding AS q_vec FROM embeddings
-          WHERE vec_id < 8),
-    probed AS (
-      SELECT query_id, q_vec, cell FROM (
-        SELECT q.query_id, q.q_vec, r.cell,
-               row_number() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY round({_cos_sql("q.q_vec", "r.rep_vec")}, 6) DESC,
-                          r.cell) AS pr
-        FROM q CROSS JOIN reps r)
-      WHERE pr <= 2),
-    scored AS (
-      SELECT p.query_id, v.vec_id AS neighbor_id,
-             round({_cos_sql("p.q_vec", "v.embedding")}, 6) AS score
-      FROM probed p JOIN embeddings v
-        ON v.label = p.cell AND v.vec_id != p.query_id)
-    SELECT query_id, neighbor_id, score, rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY score DESC, neighbor_id) AS rank
-      FROM scored)
-    WHERE rank <= 5
-    """,
-)
-def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vecs = load(spark, sf_dir, "embeddings")
-    queries_df = vecs.filter(F.col("vec_id") < 8)
-    out = similarity.ivf_topk(vecs, queries_df, k=5, n_probe=2)
     return out.select(
         "query_id", "neighbor_id", "score", F.col("rank").cast("long").alias("rank")
     )
@@ -1172,53 +1104,6 @@ def q_stratified_sample_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "frequent_phrases",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ), g AS (
-      SELECT doc_id, array_to_string(w[i:i+2], ' ') AS gram
-      FROM t, LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) r
-    )
-    SELECT gram, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-           count(*) AS n_occurrences
-    FROM g GROUP BY gram
-    HAVING count(DISTINCT doc_id) >= 5
-    """,
-)
-def q_frequent_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document frequent-phrase mining (word 3-grams in ≥ 5 docs)
-    — the phrase-level boilerplate/contamination detector: template
-    sentences, licence blurbs and benchmark prompts surface as n-grams
-    shared by many documents, and the hit list drives removal.
-
-    Scale shape: the gram explosion is a per-row array expression (one
-    pass, no join), and the aggregation is partial+final over gram
-    keys. At crawl scale the shuffle key should be md5(gram) with the
-    gram carried via min() (16-byte keys, same rule as
-    dedup.containment hash_keys) — the string-keyed form here is the
-    oracle-pinned semantics."""
-    docs = load(spark, sf_dir, "documents")
-    w = F.split(F.col("text"), " ")
-    grams = F.when(
-        F.size(w) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - F.lit(2)),
-            lambda i: F.array_join(F.slice(w, i, 3), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return (
-        docs.select("doc_id", F.explode(grams).alias("gram"))
-        .groupBy("gram")
-        .agg(
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.count(F.lit(1)).alias("n_occurrences"),
-        )
-        .where(F.col("n_docs") >= 5)
-    )
-
-
-@query(
     "frequent_phrases_hashed",
     oracle="""
     WITH t AS (
@@ -1234,12 +1119,16 @@ def q_frequent_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_frequent_phrases_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The crawl-scale form of frequent_phrases: the shuffle key is
-    md5(gram) (16 bytes however long the phrase is) and the phrase
-    text rides along as min(gram) — deterministic even under the
-    astronomically-unlikely digest collision. The driver pins it
-    value-hash-equal to the string-keyed form's semantics (same rows
-    on this corpus), the same proof pattern as
+    """Cross-document frequent-phrase mining (word 3-grams in ≥ 5 docs)
+    — the phrase-level boilerplate/contamination detector: template
+    sentences, licence blurbs and benchmark prompts surface as n-grams
+    shared by many documents, and the hit list drives removal.
+
+    The shuffle key is md5(gram) (16 bytes however long the phrase is)
+    and the phrase text rides along as min(gram) — deterministic even
+    under the astronomically-unlikely digest collision. The oracle
+    groups by md5(gram) too; the string-keyed grouping returns the same
+    rows on this corpus, the same proof pattern as
     containment_pairs_hashed."""
     docs = load(spark, sf_dir, "documents")
     w = F.split(F.col("text"), " ")

@@ -10,7 +10,9 @@ The reference's observability is one log line per event
 - ``observe()`` named metrics on the DataFrame count error rows and
   dropped-late rows JVM-side (no extra action, no Python);
 - ``partition_lineage`` computes per-shuffle-partition row counts
-  inside foreachBatch — the per-partition lineage record.
+  inside foreachBatch — the per-partition lineage record. It is one
+  extra Spark job per microbatch that re-executes the written frame's
+  plan (the frame is not cached).
 """
 
 from __future__ import annotations
@@ -27,7 +29,6 @@ class LineageListener(StreamingQueryListener):
     def __init__(self, out_path: str | Path):
         self.out_path = Path(out_path)
         self.out_path.parent.mkdir(parents=True, exist_ok=True)
-        self.progress: list[dict] = []
 
     def onQueryStarted(self, event) -> None:  # S2 onConnect analog
         self._emit({"kind": "started", "id": str(event.id), "name": event.name})
@@ -56,7 +57,6 @@ class LineageListener(StreamingQueryListener):
                 for name, row in (p.observedMetrics or {}).items()
             },
         }
-        self.progress.append(rec)
         self._emit(rec)
 
     def onQueryTerminated(self, event) -> None:  # S2 onComplete/onError analog
@@ -69,16 +69,6 @@ class LineageListener(StreamingQueryListener):
     def _emit(self, rec: dict) -> None:
         with self.out_path.open("a") as f:
             f.write(json.dumps(rec, default=str) + "\n")
-
-    def p95_batch_ms(self) -> float | None:
-        durs = sorted(
-            p["duration_ms"].get("triggerExecution", 0)
-            for p in self.progress
-            if p.get("num_input_rows", 0) > 0
-        )
-        if not durs:
-            return None
-        return float(durs[max(0, int(round(0.95 * (len(durs) + 1))) - 1) if len(durs) > 1 else 0])
 
 
 def with_observed_metrics(df: DataFrame, name: str = "gush_metrics") -> DataFrame:
@@ -94,9 +84,11 @@ def with_observed_metrics(df: DataFrame, name: str = "gush_metrics") -> DataFram
 def partition_lineage(batch_df: DataFrame, batch_id: int, out_path: str | Path) -> None:
     """Per-partition row counts for one microbatch → JSONL.
 
-    One extra narrow pass over the cached batch; records which physical
-    partition contributed how many rows (the resume/audit trail the
-    north_rule asks for).
+    Records which physical partition contributed how many rows (the
+    resume/audit trail the north_rule asks for). This is one extra
+    Spark job: the frame is not cached (``pipeline._run`` persists the
+    microbatch only for curation's gated path), so the count
+    re-executes the written frame's plan.
     """
     counts = (
         batch_df.groupBy(F.spark_partition_id().alias("partition_id"))

@@ -1,7 +1,6 @@
 """Trained-quantizer IVF (VERDICT r2 item 7): deterministic k-means
 cells must be bit-reproducible under any partitioning, and probing
-trained centroids must recover far more true neighbors than arbitrary
-labels with min-id representatives."""
+trained centroids must recover most of the brute-force neighbors."""
 
 from __future__ import annotations
 
@@ -55,26 +54,18 @@ def test_kmeans_cells_bit_reproducible_across_partitionings(clustered_vecs):
     assert aa == ab
 
 
-def test_trained_ivf_beats_minid_representatives(spark, clustered_vecs):
+def test_trained_ivf_recall_vs_brute_force(spark, clustered_vecs):
     """Recall@5 vs brute-force ground truth: trained centroids track the
-    data's density; geometry-blind labels + min-id reps do not. (At
-    sf0.001/sf0.01 table scale the measured gap is 0.925/0.875 trained
-    vs 0.075/0.15 min-id.)"""
+    data's density, so probing 2 of 10 cells finds most true neighbors
+    (0.925/0.875 at sf0.001/sf0.01 table scale)."""
     q = clustered_vecs.filter(F.col("vec_id") < 8)
     truth = _topsets(similarity.brute_force_topk(clustered_vecs, q, k=5))
-    # arbitrary (geometry-uncorrelated) labels for the min-id baseline
-    labeled = clustered_vecs.withColumn(
-        "label", F.pmod(F.xxhash64("vec_id"), F.lit(10))
-    )
-    minid = _topsets(similarity.ivf_topk(labeled, q, k=5, n_probe=2))
     trained = _topsets(
         similarity.kmeans_ivf_topk(
             clustered_vecs, q, k=5, n_probe=2, n_cells=10, iters=2
         )
     )
-    r_minid, r_trained = _recall(minid, truth), _recall(trained, truth)
-    assert r_trained >= 0.8
-    assert r_trained >= r_minid + 0.3
+    assert _recall(trained, truth) >= 0.8
 
 
 def test_centroid_map_math_and_scale_invariance(spark):

@@ -79,3 +79,29 @@ def test_lineage_written_per_batch(spark, events_dir, tmp_dirs):
     total = sum(r["total_rows"] for r in recs)
     assert total == sink.read_all_appends(spark).count()
     assert len(recs) >= 5  # one per microbatch
+
+
+def test_soak_tool_reads_listener_state_series(spark, events_dir, tmp_dirs):
+    """tools/soak_state.py takes its per-batch state series from the
+    LineageListener's JSONL records; pin that path on a small stateful
+    stream."""
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parent.parent / "tools" / "soak_state.py"
+    spec = importlib.util.spec_from_file_location("soak_state", path)
+    soak = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(soak)
+
+    def start():
+        query, _sink = cep_pipeline(
+            spark, events_dir, tmp_dirs["sink"], tmp_dirs["checkpoint"],
+            config=CFG, available_now=True, max_files_per_trigger=1,
+        )
+        return query
+
+    series = soak._run_with_listener(spark, start)
+    with_input = [r for r in series if r["rows_in"] > 0]
+    assert len(with_input) >= 5  # one per input file
+    assert sum(r["rows_in"] for r in with_input) == 10
+    assert all(r["state_rows"] >= 0 and r["state_bytes"] > 0 for r in series)

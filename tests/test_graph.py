@@ -425,6 +425,7 @@ def test_triangle_counts_known_graph(spark):
         ("a", "e"),
     ]
     und = spark.createDataFrame(und_rows, "id_a string, id_b string")
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
     got = {
         r["node"]: (r["degree"], r["triangles"], r["clustering_x1e9"])
         for r in triangle_counts(und).collect()
@@ -434,6 +435,8 @@ def test_triangle_counts_known_graph(spark):
     assert got["d"] == (3, 3, PR_SCALE)
     assert got["a"] == (4, 3, PR_SCALE // 2)
     assert got["e"] == (1, 0, 0)
+    # no cached frame outlives the call
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= cached
 
 
 def test_triangle_counts_triangle_free(spark):
@@ -459,6 +462,7 @@ def test_reciprocity_known_graph(spark):
         ("a", "b", 3), ("b", "a", 1), ("a", "c", 2),
         ("c", "d", 1), ("d", "d", 5),  # self-loop must not count
     ]
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
     got = {
         r["node"]: (
             r["out_deg"], r["in_deg"], r["mutual"], r["reciprocity_x1e9"]
@@ -471,6 +475,8 @@ def test_reciprocity_known_graph(spark):
         "c": (1, 1, 0, 0),
         "d": (0, 1, 0, 0),
     }
+    # no cached frame outlives the call
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= cached
 
 
 def test_kcore_peels_to_fixpoint(spark):

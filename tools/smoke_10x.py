@@ -32,12 +32,10 @@ sys.path.insert(0, str(REPO))
 
 HEAVY = [
     "near_dup_clusters",
-    "containment_pairs",
     "containment_pairs_hashed",
     "curation_pipeline",
     "simhash_near_dup_pairs",
     "doc_featurize",
-    "frequent_phrases",
     "frequent_phrases_hashed",
     "repetition_scores",
     "boilerplate_line_removal",

@@ -123,10 +123,18 @@ def gen_events(out_dir: Path) -> None:
         pq.write_table(tbl, out_dir / f"part-{f:05d}.parquet")
 
 
-def _series(listener) -> list[dict]:
+def _records(lineage: Path) -> list[dict]:
+    """The lineage listener's complete JSONL records written so far (a
+    line still being appended has no newline yet and is left out)."""
+    if not lineage.exists():
+        return []
+    return [json.loads(line) for line in lineage.read_text().split("\n")[:-1]]
+
+
+def _series(records: list[dict]) -> list[dict]:
     """Per-batch state series from the lineage listener's records."""
     out = []
-    for p in listener.progress:
+    for p in records:
         if p.get("kind") != "progress" or not p.get("state_operators"):
             continue
         s = p["state_operators"][0]
@@ -197,12 +205,14 @@ def _run_with_listener(spark, start_fn) -> list[dict]:
         q.awaitTermination()
         # listener callbacks are async; wait for the terminated record
         for _ in range(100):
-            if any(p.get("kind") == "terminated" for p in listener.progress):
+            if any(p.get("kind") == "terminated" for p in _records(lineage)):
                 break
             time.sleep(0.2)
     finally:
         spark.streams.removeListener(listener)
-    return _series(listener)
+    series = _series(_records(lineage))
+    shutil.rmtree(lineage.parent, ignore_errors=True)
+    return series
 
 
 def soak_curation(spark, work: Path) -> dict:
