@@ -13,8 +13,34 @@ format stays compatible.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 from pathlib import Path
+
+_DURATION_RE = re.compile(
+    r"\s*(\d+)\s*(millisecond|second|minute|hour|day)s?\s*", re.IGNORECASE
+)
+_UNIT_US = {
+    "millisecond": 1_000,
+    "second": 1_000_000,
+    "minute": 60 * 1_000_000,
+    "hour": 3_600 * 1_000_000,
+    "day": 86_400 * 1_000_000,
+}
+
+
+def duration_us(duration: str) -> int:
+    """Microseconds in a Spark duration string ('10 minutes', '1 hour',
+    '500 milliseconds'): an integer count and one unit, any case."""
+    m = _DURATION_RE.fullmatch(duration)
+    if not m:
+        raise ValueError(f"unsupported duration string: {duration!r}")
+    return int(m.group(1)) * _UNIT_US[m.group(2).lower()]
+
+
+_YAML_SCALARS = (
+    "window_duration", "watermark_delay", "max_files_per_trigger", "skew_salt_buckets",
+)
 
 
 @dataclass(frozen=True)
@@ -24,8 +50,6 @@ class GushSparkConfig:
     ignored_url_prefixes: tuple[str, ...] = ()
     # event-time windowing defaults
     window_duration: str = "10 minutes"
-    slide_duration: str = "5 minutes"
-    session_gap: str = "30 minutes"
     watermark_delay: str = "10 minutes"
     # rate control (S4 analog — actor demand → microbatch rate limits)
     max_files_per_trigger: int = 4
@@ -34,7 +58,6 @@ class GushSparkConfig:
     input_format: str = "parquet"
     # skew handling
     skew_salt_buckets: int = 8
-    hot_host_threshold: int = 100_000
     extra: dict = field(default_factory=dict)
 
     @staticmethod
@@ -58,18 +81,15 @@ class GushSparkConfig:
             v = raw.pop(key, "")
             return tuple(s.strip() for s in v.strip("[]").split(",") if s.strip())
 
-        return GushSparkConfig(
-            ignored_hosts=_list("ignored_hosts"),
-            ignored_url_prefixes=_list("ignored_url_prefixes"),
-            window_duration=raw.pop("window_duration", "10 minutes"),
-            slide_duration=raw.pop("slide_duration", "5 minutes"),
-            session_gap=raw.pop("session_gap", "30 minutes"),
-            watermark_delay=raw.pop("watermark_delay", "10 minutes"),
-            max_files_per_trigger=int(raw.pop("max_files_per_trigger", "4")),
-            skew_salt_buckets=int(raw.pop("skew_salt_buckets", "8")),
-            hot_host_threshold=int(raw.pop("hot_host_threshold", "100000")),
-            extra=raw,
-        )
+        lists = {k: _list(k) for k in ("ignored_hosts", "ignored_url_prefixes")}
+        # an absent key keeps the dataclass default; a present one takes
+        # the type of that default
+        scalars = {
+            k: type(getattr(GushSparkConfig, k))(raw.pop(k))
+            for k in _YAML_SCALARS
+            if k in raw
+        }
+        return GushSparkConfig(**lists, **scalars, extra=raw)
 
 
 DEFAULT_CONFIG = GushSparkConfig()

@@ -2,8 +2,9 @@
 
 This is the engine's re-imagining of gush's CEP layer (cep/Cep.scala):
 gush gives users typed event flows + windowed batches; our engine gives
-a keyed, event-time-ordered state machine over page events, built on
-``applyInPandasWithState`` keyed by url-host (north_star requirement).
+a keyed, event-time-ordered state machine over page events, keyed by
+url-host and run through the keyed-state runner
+(streaming/keyed_state.py; north_star requirement).
 
 Semantics per host key:
 - events are processed in (warc_ts, event_id) order within each
@@ -17,23 +18,26 @@ Semantics per host key:
                 join: page-event vs prior-crawl state), update state;
 - ``drop``    → emit enriched, then evict the url from state.
 
-State growth is bounded two ways at scale: event-time timeout evicts
-idle hosts (EventTimeTimeout vs the stream's watermark) and per-url
-entries are dropped on ``drop`` events. The rule logic itself is a pure
-function over (sorted pandas batch, dict state) — unit-testable without
-Spark (SURVEY.md §7 step 5).
+State growth is bounded two ways at scale: idle hosts are evicted
+``ttl_ms`` of event time past the watermark — the TTL and the eviction
+live in the runner, not here — and per-url entries are dropped on
+``drop`` events. The rule logic itself is a pure function over (sorted
+pandas batch, dict state) — unit-testable without Spark (SURVEY.md §7
+step 5).
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable, Iterator
+import json
+from typing import Any, Callable
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from gush_spark.streaming.keyed_state import run_keyed
 
 CEP_OUTPUT_SCHEMA = T.StructType(
     [
@@ -213,66 +217,35 @@ def apply_rules_fast(
     )
 
 
-def _make_cep_func(
-    ttl_ms: int = 3_600_000,
-    emit_closures: bool = False,
-    has_watermark: bool = True,
-):
-    """Factory for the default-machine stateful function.
-
-    ``emit_closures=True`` turns the TTL eviction into an observable
-    event: when a host's state times out (idle past watermark + ttl),
-    one ``session_closed`` row per live url is emitted carrying the
-    final (prior_ts_us = last event ts, crawl_count, session_id) before
-    the state is removed — the CEP session-end record. event_id is -1
-    (synthetic; no input row produced it)."""
-
-    def func(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # idle host past watermark: evict everything (bounded state)
-            if emit_closures and state.exists:
-                urls, ts_us, counts, sessions = state.get
-                yield pd.DataFrame(
-                    {
-                        "host": key[0],
-                        "event_id": -1,
-                        "url": list(urls),
-                        "warc_ts_us": list(ts_us),
-                        "event_type": "session_closed",
-                        "prior_ts_us": pd.Series(list(ts_us), dtype="Int64"),
-                        "crawl_count": list(counts),
-                        "session_id": list(sessions),
-                    }
-                )
-            state.remove()
-            return
-        if state.exists:
-            urls, ts_us, counts, sessions = state.get
-            sdict = {u: (t, c, s) for u, t, c, s in zip(urls, ts_us, counts, sessions)}
-        else:
-            sdict = {}
-        for pdf in pdf_iter:
-            if len(pdf):
-                yield apply_rules_fast(pdf, sdict)
-        if sdict:
-            state.update((list(sdict), [v[0] for v in sdict.values()],
-                          [v[1] for v in sdict.values()],
-                          [v[2] for v in sdict.values()]))
-            # TTL: hosts idle past the watermark get evicted on timeout
-            # (getCurrentWatermarkMs raises when the plan carries no
-            # watermark — same guard as the custom-rule path)
-            if has_watermark and state.getCurrentWatermarkMs() > 0:
-                state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + ttl_ms)
-        else:
-            state.remove()
-
-    return func
+def _load_cep_state(stored) -> dict[str, tuple[int, int, int]]:
+    return {} if stored is None else {u: (t, c, s) for u, t, c, s in zip(*stored)}
 
 
-# kept as the stable name tests/pipelines reference (1h TTL, silent eviction)
-_cep_func = _make_cep_func()
+def _save_cep_state(sdict: dict, watermark_ms: int):
+    if not sdict:
+        return None
+    return (list(sdict), [v[0] for v in sdict.values()],
+            [v[1] for v in sdict.values()], [v[2] for v in sdict.values()])
+
+
+def _session_closures(key: tuple, sdict: dict) -> pd.DataFrame:
+    """The CEP session-end record: one ``session_closed`` row per live
+    url of an evicted host, carrying the final (prior_ts_us = last event
+    ts, crawl_count, session_id). event_id is -1 (synthetic; no input
+    row produced it)."""
+    ts = [v[0] for v in sdict.values()]
+    return pd.DataFrame(
+        {
+            "host": key[0],
+            "event_id": -1,
+            "url": list(sdict),
+            "warc_ts_us": ts,
+            "event_type": "session_closed",
+            "prior_ts_us": pd.Series(ts, dtype="Int64"),
+            "crawl_count": [v[1] for v in sdict.values()],
+            "session_id": [v[2] for v in sdict.values()],
+        }
+    )
 
 
 # user-pluggable rule: (event-time-sorted per-host pandas batch, JSON-able
@@ -283,38 +256,6 @@ CepRule = Callable[[pd.DataFrame, dict], pd.DataFrame]
 # shape (gush's user surface is arbitrary Flow/Sink lambdas,
 # cep/Cep.scala:30,38; ours is an arbitrary python state dict)
 GENERIC_STATE_SCHEMA = T.StructType([T.StructField("js", T.StringType())])
-
-
-def _make_custom_func(rule: CepRule, ttl_ms: int, has_watermark: bool):
-    import json
-
-    def func(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        sdict = json.loads(state.get[0]) if state.exists else {}
-        for pdf in pdf_iter:
-            if len(pdf):
-                out = rule(
-                    pdf.sort_values(
-                        ["warc_ts_us", "event_id"], kind="stable"
-                    ).reset_index(drop=True),
-                    sdict,
-                )
-                if out is not None and len(out):
-                    yield out
-        if sdict:
-            state.update((json.dumps(sdict),))
-            # getCurrentWatermarkMs raises without a watermark — only
-            # arm the event-time TTL when the plan carries one
-            if ttl_ms and has_watermark and state.getCurrentWatermarkMs() > 0:
-                state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + ttl_ms)
-        else:
-            state.remove()
-
-    return func
 
 
 # --- example plug-in rule: gush's windowed count flow -----------------------
@@ -454,6 +395,11 @@ def cep_enrich(
     live url when a host's state is TTL-evicted (event-time idle past
     the watermark) — session-end records instead of silent eviction.
 
+    On a batch frame each host is stepped once over all its events, on
+    fresh state (the keyed-state runner's batch twin); there
+    ``emit_closures=True`` emits every host's closures at the end of
+    input, as if the stream ended there.
+
     Plug-in point (SURVEY.md §2.10): pass ``rule`` — a python function
     ``(pdf, state_dict) -> pdf`` over the event-time-sorted per-host
     batch — plus the matching ``output_schema``. State is any JSON-able
@@ -477,33 +423,26 @@ def cep_enrich(
         "host", "event_id", "url", "warc_ts",
         F.unix_micros("warc_ts").alias("warc_ts_us"), "event_type",
     )
-    timeout = (
-        GroupStateTimeout.EventTimeTimeout
-        if (watermark_delay and events.isStreaming)
-        else GroupStateTimeout.NoTimeout
-    )
     if rule is None:
-        func, out_schema, state_schema = (
-            _make_cep_func(
-                ttl_ms, emit_closures, bool(watermark_delay and events.isStreaming)
-            ),
-            CEP_OUTPUT_SCHEMA,
-            CEP_STATE_SCHEMA,
+        return run_keyed(
+            ev, ["host"], CEP_OUTPUT_SCHEMA, CEP_STATE_SCHEMA,
+            load=_load_cep_state,
+            step=lambda key, sdict, pdf: (sdict, apply_rules_fast(pdf, sdict)),
+            save=_save_cep_state,
+            deadline=lambda key, clock_ms: clock_ms + ttl_ms,
+            expire=_session_closures if emit_closures else None,
         )
-    else:
-        if output_schema is None:
-            raise ValueError("a custom rule needs its output_schema")
-        func, out_schema, state_schema = (
-            _make_custom_func(
-                rule, ttl_ms, bool(watermark_delay and events.isStreaming)
-            ),
-            output_schema,
-            GENERIC_STATE_SCHEMA,
-        )
-    return ev.groupBy("host").applyInPandasWithState(
-        func,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    if output_schema is None:
+        raise ValueError("a custom rule needs its output_schema")
+
+    def step(key: tuple, sdict: dict, pdf: pd.DataFrame):
+        pdf = pdf.sort_values(["warc_ts_us", "event_id"], kind="stable")
+        return sdict, rule(pdf.reset_index(drop=True), sdict)
+
+    return run_keyed(
+        ev, ["host"], output_schema, GENERIC_STATE_SCHEMA,
+        load=lambda stored: {} if stored is None else json.loads(stored[0]),
+        step=step,
+        save=lambda sdict, watermark_ms: (json.dumps(sdict),) if sdict else None,
+        deadline=lambda key, clock_ms: clock_ms + ttl_ms if ttl_ms else None,
     )

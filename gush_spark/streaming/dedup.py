@@ -27,8 +27,8 @@ in front of another stateful op anyway):
   jaccard ≈ 1): trivially perturbed boilerplate collapses at crawl time
   with bounded state;
 - ``near_dup_candidates_stream``: the streaming twin of batch
-  ``lsh_candidate_pairs`` — stateful band-bucket membership
-  (applyInPandasWithState keyed by (band, band_sig)) emitting candidate
+  ``lsh_candidate_pairs`` — stateful band-bucket membership (the
+  keyed-state runner, keyed by (band, band_sig)) emitting candidate
   pairs for every same-bucket co-occurrence within the watermark
   horizon. The drop decision composes downstream exactly like the batch
   pipeline (candidates → verify → cluster → canonical).
@@ -36,18 +36,15 @@ in front of another stateful op anyway):
 
 from __future__ import annotations
 
-import re
-from typing import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+from gush_spark.config import duration_us
 from gush_spark.functions.text_analysis import md5_fingerprint
 from gush_spark.operators.dedup import LSH_BANDS, LSH_ROWS
+from gush_spark.streaming.keyed_state import run_keyed
 
 
 def with_fingerprint(pages: DataFrame, text_col: str = "text") -> DataFrame:
@@ -77,22 +74,6 @@ def dedup_pages_stream(
 # ---------------------------------------------------------------------------
 # streaming NEAR-dup
 # ---------------------------------------------------------------------------
-
-_DELAY_RE = re.compile(r"^\s*(\d+)\s*(second|minute|hour|day)s?\s*$")
-_UNIT_US = {
-    "second": 1_000_000,
-    "minute": 60 * 1_000_000,
-    "hour": 3_600 * 1_000_000,
-    "day": 86_400 * 1_000_000,
-}
-
-
-def _delay_us(delay: str) -> int:
-    m = _DELAY_RE.match(delay)
-    if not m:
-        raise ValueError(f"unsupported delay string: {delay!r}")
-    return int(m.group(1)) * _UNIT_US[m.group(2)]
-
 
 def _band_sig(minhash: F.Column, t: int, rows: int) -> F.Column:
     """md5 of the '|'-joined row hashes of band ``t`` — byte-identical
@@ -191,7 +172,9 @@ _BUCKET_STATE_SCHEMA = T.StructType(
 def _pair_rows(pdf: pd.DataFrame, ids: list, tss: list, max_bucket: int):
     """Pair every (ts,id)-ordered row against the bucket membership so
     far, growing the membership up to ``max_bucket``; returns the pair
-    column lists. Shared by the streaming state func and batch replay."""
+    column lists. The bucket machine's step: it folds stream chunks into
+    stored membership and, in the batch twin, a whole bucket into an
+    empty one."""
     out_a, out_b = [], []
     for doc_id, ts in zip(pdf["id"], pdf["ts_us"]):
         for prior in ids:
@@ -206,52 +189,6 @@ def _pair_rows(pdf: pd.DataFrame, ids: list, tss: list, max_bucket: int):
             ids.append(doc_id)
             tss.append(int(ts))
     return out_a, out_b
-
-
-def _make_bucket_pairs_func(horizon_us: int, max_bucket: int, has_watermark: bool):
-    def func(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        band = int(key[0])
-        ids, tss = (
-            (list(state.get[0]), list(state.get[1])) if state.exists else ([], [])
-        )
-        max_ts = max(tss) if tss else 0
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(["ts_us", "id"], kind="stable")
-            max_ts = max(max_ts, int(pdf["ts_us"].max()))
-            out_a, out_b = _pair_rows(pdf, ids, tss, max_bucket)
-            if out_a:
-                yield pd.DataFrame(
-                    {"id_a": out_a, "id_b": out_b, "band": band}
-                ).astype({"band": "int32"})
-        # prune: an entry only matters for FUTURE same-bucket arrivals.
-        # With a watermark, any future event has ts > wm, so a pair with
-        # gap ≤ horizon needs the entry's ts ≥ wm - horizon — older ones
-        # are provably dead (the dropDuplicatesWithinWatermark retention
-        # rule). Without one (batch replay), fall back to 2x horizon
-        # behind the bucket-local max.
-        if has_watermark and state.getCurrentWatermarkMs() > 0:
-            cutoff = state.getCurrentWatermarkMs() * 1000 - horizon_us
-        else:
-            cutoff = max_ts - 2 * horizon_us
-        keep = [i for i, t in enumerate(tss) if t >= cutoff]
-        ids, tss = [ids[i] for i in keep], [tss[i] for i in keep]
-        if ids:
-            state.update((ids, tss))
-            if has_watermark and state.getCurrentWatermarkMs() > 0:
-                state.setTimeoutTimestamp(
-                    state.getCurrentWatermarkMs() + horizon_us // 1000 + 1
-                )
-        else:
-            state.remove()
-
-    return func
 
 
 def near_dup_candidates_stream(
@@ -277,11 +214,10 @@ def near_dup_candidates_stream(
     entries per bucket, horizon-pruned, idle buckets TTL-evicted).
     Multi-band collisions emit one pair per band — ``distinct()``
     downstream, exactly like the batch operator."""
-    horizon_us = _delay_us(watermark_delay)
+    horizon_us = duration_us(watermark_delay)
     sig = with_band_signatures(pages, minhash_col, bands, rows)
     pairs_src = sig.filter(F.col(minhash_col).isNotNull())
-    streaming = pages.isStreaming
-    if streaming:
+    if pages.isStreaming:
         pairs_src = pairs_src.withWatermark(ts_col, watermark_delay)
     long = pairs_src.select(
         F.col(id_col).cast("string").alias("id"),
@@ -298,23 +234,36 @@ def near_dup_candidates_stream(
             )
         ).alias("bb"),
     ).select("id", ts_col, "ts_us", "bb.band", "bb.band_sig")
-    if not streaming:
-        # applyInPandasWithState is streaming-only; batch replay gets the
-        # whole bucket in one stateless call — same pairing + cap logic
-        def batch_fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(["ts_us", "id"], kind="stable")
-            out_a, out_b = _pair_rows(pdf, [], [], max_bucket)
-            return pd.DataFrame(
-                {"id_a": out_a, "id_b": out_b, "band": int(key[0])}
-            ).astype({"band": "int32"})
 
-        return long.groupBy("band", "band_sig").applyInPandas(
-            batch_fn, NEAR_DUP_CANDIDATES_SCHEMA
-        )
-    return long.groupBy("band", "band_sig").applyInPandasWithState(
-        _make_bucket_pairs_func(horizon_us, max_bucket, streaming),
-        outputStructType=NEAR_DUP_CANDIDATES_SCHEMA,
-        stateStructType=_BUCKET_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    def step(key: tuple, acc: tuple, pdf: pd.DataFrame):
+        ids, tss, max_ts = acc
+        pdf = pdf.sort_values(["ts_us", "id"], kind="stable")
+        out_a, out_b = _pair_rows(pdf, ids, tss, max_bucket)
+        pairs = pd.DataFrame({"id_a": out_a, "id_b": out_b, "band": int(key[0])})
+        return (ids, tss, max(max_ts, int(pdf["ts_us"].max()))), pairs.astype({"band": "int32"})
+
+    def save(acc: tuple, watermark_ms: int):
+        # prune: an entry only matters for FUTURE same-bucket arrivals.
+        # With a watermark, any future event has ts > wm, so a pair with
+        # gap ≤ horizon needs the entry's ts ≥ wm - horizon — older ones
+        # are provably dead (the dropDuplicatesWithinWatermark retention
+        # rule). Before the first watermark, fall back to 2x horizon
+        # behind the bucket-local max.
+        ids, tss, max_ts = acc
+        if watermark_ms:
+            cutoff = watermark_ms * 1000 - horizon_us
+        else:
+            cutoff = max_ts - 2 * horizon_us
+        keep = [i for i, t in enumerate(tss) if t >= cutoff]
+        return ([ids[i] for i in keep], [tss[i] for i in keep]) if keep else None
+
+    return run_keyed(
+        long, ["band", "band_sig"], NEAR_DUP_CANDIDATES_SCHEMA, _BUCKET_STATE_SCHEMA,
+        load=lambda stored: (
+            ([], [], 0) if stored is None
+            else (list(stored[0]), list(stored[1]), max(stored[1], default=0))
+        ),
+        step=step,
+        save=save,
+        deadline=lambda key, clock_ms: clock_ms + horizon_us // 1000 + 1,
     )

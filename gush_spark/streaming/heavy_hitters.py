@@ -14,7 +14,8 @@ Shape:
   — every copy of a gram lands in the same shard, so a shard's count
   of a gram IS its window count, and the per-window hot spot a single
   window-keyed state would create is spread over ``S`` tasks;
-- ONE ``applyInPandasWithState`` holds the MG summary per
+- ONE keyed-state machine (``run_window_summary`` over
+  streaming/keyed_state.py) holds the MG summary per
   (window, shard); updates are the same vectorized ``mg_merge`` the
   batch pass uses (value_counts add + batched decrement — never a
   per-row loop);
@@ -46,16 +47,16 @@ at streaming tier.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from gush_spark.functions.text_analysis import words_of
 from gush_spark.operators.heavy_hitters import HH_SCALE, _gram_expr, mg_merge
+from gush_spark.streaming.keyed_state import run_keyed
 
 HH_CANDIDATES_SCHEMA = T.StructType(
     [
@@ -113,46 +114,62 @@ def windowed_gram_slots(
     )
 
 
-def _make_hh_state_func(m: int, has_watermark: bool):
-    def func(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        window_start_us, window_end_ms, shard = int(key[0]), int(key[1]), int(key[2])
-        if state.hasTimedOut:
-            grams, residuals, slots = state.get
-            state.remove()
-            k = len(grams)
-            yield pd.DataFrame(
-                {
-                    "window_start_us": [window_start_us] * (k + 1),
-                    "shard": pd.array([shard] * (k + 1), dtype="int32"),
-                    "gram": list(grams) + [None],
-                    "residual": list(residuals) + [0],
-                    "slots": [0] * k + [int(slots)],
-                }
-            )
-            return
-        if state.exists:
-            g, r, slots = state.get
-            residual = pd.Series(list(r), index=list(g), dtype="int64")
-            slots = int(slots)
-        else:
-            residual, slots = pd.Series(dtype="int64"), 0
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            slots += len(pdf)
-            residual = mg_merge(residual, pdf["gram"].value_counts(), m)
-        state.update(
-            (list(residual.index.astype(object)), [int(v) for v in residual], slots)
-        )
-        # fire when the watermark passes the window end; if the
-        # watermark is already past it (stragglers admitted late),
-        # the timeout must still be set in the future.
-        wm = state.getCurrentWatermarkMs() if has_watermark else 0
-        state.setTimeoutTimestamp(max(window_end_ms, wm + 1))
+def run_window_summary(
+    rows: DataFrame,
+    out_schema: T.StructType,
+    state_schema: T.StructType,
+    *,
+    load: Callable,
+    merge: Callable,
+    save: Callable,
+    emit: Callable,
+) -> DataFrame:
+    """One mergeable summary per (window, shard) of ``rows`` (keyed by
+    window_start_us, window_end_ms, shard): chunks fold in through
+    ``merge(acc, pdf)``; ``emit(acc)`` — a dict of columns, tagged here
+    with the window start and shard — goes out once, when the watermark
+    passes the window end (a batch frame: once per complete group). The
+    heavy-hitter and sampler machines differ only in these callbacks."""
 
-    return func
+    def expire(key: tuple, acc) -> pd.DataFrame:
+        cols = emit(acc)
+        n = len(next(iter(cols.values())))
+        return pd.DataFrame(
+            {
+                "window_start_us": [int(key[0])] * n,
+                "shard": pd.array([int(key[2])] * n, dtype="int32"),
+                **cols,
+            }
+        )
+
+    return run_keyed(
+        rows, ["window_start_us", "window_end_ms", "shard"], out_schema, state_schema,
+        load=load,
+        step=lambda key, acc, pdf: (merge(acc, pdf), None),
+        save=lambda acc, watermark_ms: save(acc),
+        # fire when the watermark passes the window end; if the
+        # watermark is already past it (stragglers admitted late), the
+        # timeout must still be set in the future
+        deadline=lambda key, clock_ms: max(int(key[1]), clock_ms + 1),
+        expire=expire,
+    )
+
+
+def _load_mg(stored) -> tuple[pd.Series, int]:
+    if stored is None:
+        return pd.Series(dtype="int64"), 0
+    grams, residuals, slots = stored
+    return pd.Series(list(residuals), index=list(grams), dtype="int64"), int(slots)
+
+
+def _mg_rows(acc: tuple[pd.Series, int]) -> dict:
+    residual, slots = acc
+    k = len(residual)
+    return {
+        "gram": list(residual.index.astype(object)) + [None],
+        "residual": [int(v) for v in residual] + [0],
+        "slots": [0] * k + [slots],
+    }
 
 
 def windowed_heavy_hitter_candidates(
@@ -187,31 +204,14 @@ def windowed_heavy_hitter_candidates(
         n=n,
         shards=shards,
     )
-    keys = ["window_start_us", "window_end_ms", "shard"]
-    if not pages.isStreaming:
-
-        def batch_fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            residual = mg_merge(
-                pd.Series(dtype="int64"), pdf["gram"].value_counts(), m
-            )
-            k = len(residual)
-            return pd.DataFrame(
-                {
-                    "window_start_us": [int(key[0])] * (k + 1),
-                    "shard": pd.array([int(key[2])] * (k + 1), dtype="int32"),
-                    "gram": list(residual.index.astype(object)) + [None],
-                    "residual": [int(v) for v in residual] + [0],
-                    "slots": [0] * k + [len(pdf)],
-                }
-            )
-
-        return slots.groupBy(*keys).applyInPandas(batch_fn, HH_CANDIDATES_SCHEMA)
-    return slots.groupBy(*keys).applyInPandasWithState(
-        _make_hh_state_func(m, has_watermark=True),
-        outputStructType=HH_CANDIDATES_SCHEMA,
-        stateStructType=_HH_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return run_window_summary(
+        slots, HH_CANDIDATES_SCHEMA, _HH_STATE_SCHEMA,
+        load=_load_mg,
+        merge=lambda acc, pdf: (
+            mg_merge(acc[0], pdf["gram"].value_counts(), m), acc[1] + len(pdf)
+        ),
+        save=lambda acc: (list(acc[0].index.astype(object)), [int(v) for v in acc[0]], acc[1]),
+        emit=_mg_rows,
     )
 
 

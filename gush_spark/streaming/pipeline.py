@@ -26,24 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gush_spark.config import DEFAULT_CONFIG, GushSparkConfig
+from gush_spark.config import DEFAULT_CONFIG, GushSparkConfig, duration_us
 from gush_spark.functions.extract import with_extracted_text
 from gush_spark.operators.events import blacklist_filter, host_of, supported_kinds_filter
 from gush_spark.streaming.cep import cep_enrich
 from gush_spark.streaming.metrics import partition_lineage, with_observed_metrics
 from gush_spark.streaming.sink import IdempotentKeyedSink
 from gush_spark.streaming.source import read_input_stream, read_page_events_stream
-
-
-_DURATION_UNIT_S = {
-    "millisecond": 0.001, "second": 1, "minute": 60, "hour": 3600, "day": 86400,
-}
-
-
-def _duration_seconds(duration: str) -> float:
-    """Seconds in a Spark duration string ('10 minutes', '1 hour')."""
-    n, unit = duration.strip().split()
-    return float(n) * _DURATION_UNIT_S[unit.rstrip("s").lower()]
 
 
 def _run(
@@ -522,10 +511,9 @@ def cep_pipeline(
             make_politeness_rule,
         )
 
-        window_s = POLITENESS_WIN_US / 1_000_000
         retention = max(
             POLITENESS_RETENTION_WINDOWS,
-            math.ceil(_duration_seconds(config.watermark_delay) / window_s),
+            math.ceil(duration_us(config.watermark_delay) / POLITENESS_WIN_US),
         )
         enriched = cep_enrich(
             stream,

@@ -37,13 +37,12 @@ training-pipeline surface at streaming tier.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from gush_spark.streaming.heavy_hitters import run_window_summary
 
 SAMPLE_SCHEMA = T.StructType(
     [
@@ -130,40 +129,6 @@ def _merge_topk(
     )
 
 
-def _make_sample_state_func(k: int, has_watermark: bool):
-    def func(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        window_start_us, window_end_ms, shard = (
-            int(key[0]),
-            int(key[1]),
-            int(key[2]),
-        )
-        if state.hasTimedOut:
-            urls, weights, priorities = state.get
-            state.remove()
-            n = len(urls)
-            yield pd.DataFrame(
-                {
-                    "window_start_us": [window_start_us] * n,
-                    "shard": pd.array([shard] * n, dtype="int32"),
-                    "url": list(urls),
-                    "weight": [int(v) for v in weights],
-                    "priority": [int(v) for v in priorities],
-                }
-            )
-            return
-        tup = state.get if state.exists else ([], [], [])
-        for pdf in pdf_iter:
-            if len(pdf):
-                tup = _merge_topk(pdf, tup, k)
-        state.update(tup)
-        wm = state.getCurrentWatermarkMs() if has_watermark else 0
-        state.setTimeoutTimestamp(max(window_end_ms, wm + 1))
-
-    return func
-
-
 def windowed_priority_sample(
     pages: DataFrame,
     *,
@@ -190,29 +155,16 @@ def windowed_priority_sample(
         watermark_delay=watermark_delay,
         shards=shards,
     )
-    keys = ["window_start_us", "window_end_ms", "shard"]
-    if not pages.isStreaming:
-
-        def batch_fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            urls, weights, priorities = _merge_topk(pdf, ([], [], []), k)
-            n = len(urls)
-            return pd.DataFrame(
-                {
-                    "window_start_us": [int(key[0])] * n,
-                    "shard": pd.array([int(key[2])] * n, dtype="int32"),
-                    "url": urls,
-                    "weight": weights,
-                    "priority": priorities,
-                }
-            )
-
-        return rows.groupBy(*keys).applyInPandas(batch_fn, SAMPLE_SCHEMA)
-    return rows.groupBy(*keys).applyInPandasWithState(
-        _make_sample_state_func(k, has_watermark=True),
-        outputStructType=SAMPLE_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return run_window_summary(
+        rows, SAMPLE_SCHEMA, _STATE_SCHEMA,
+        load=lambda stored: ([], [], []) if stored is None else stored,
+        merge=lambda acc, pdf: _merge_topk(pdf, acc, k),
+        save=lambda acc: acc,
+        emit=lambda acc: {
+            "url": list(acc[0]),
+            "weight": [int(v) for v in acc[1]],
+            "priority": [int(v) for v in acc[2]],
+        },
     )
 
 

@@ -20,12 +20,47 @@ def _chunk(spark, path, rows):
     ).parquet(str(path))
 
 
+def _write_chunks(spark, src, chunks):
+    """One bare parquet file per chunk, so maxFilesPerTrigger=1 replays
+    them in order as microbatches."""
+    import os
+    import shutil
+    import time
+
+    src.mkdir()
+    for i, rows in enumerate(chunks):
+        _chunk(spark, src / f"tmp{i}", rows)
+    files = sorted(src.rglob("*.parquet"))
+    now = time.time()
+    for i, f in enumerate(files):
+        dst = src / f"part-{i}.parquet"
+        shutil.copy(f, dst)
+        # the file source orders new files by mtime: pin strictly
+        # ascending mtimes so chunk replay order is deterministic
+        os.utime(dst, (now + i, now + i))
+        shutil.rmtree(f.parent)
+    return str(src)
+
+
+def _run_closures(spark, events_dir, checkpoint, name):
+    stream = read_page_events_stream(spark, events_dir, max_files_per_trigger=1)
+    enriched = cep_enrich(
+        stream, watermark_delay="10 minutes", ttl_ms=60_000, emit_closures=True
+    )
+    q = (
+        enriched.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    return q, spark.table(name).toPandas()
+
+
 @pytest.fixture()
 def events_dir(spark, tmp_path):
-    import shutil
-
-    src = tmp_path / "events"
-    src.mkdir()
     h = dt.timedelta(hours=1)
     # chunk0 advances the watermark so chunk1's host can arm its TTL;
     # chunks 2-3 advance event time far past the (tiny) TTL
@@ -39,39 +74,11 @@ def events_dir(spark, tmp_path):
         [(5, "http://b.example/x", "b.example", T0 + 3 * h, "recrawl", None)],
         [(6, "http://b.example/x", "b.example", T0 + 4 * h, "recrawl", None)],
     ]
-    for i, rows in enumerate(chunks):
-        _chunk(spark, src / f"tmp{i}", rows)
-    # flatten to bare files so maxFilesPerTrigger=1 replays them in order
-    import os
-    import time
-
-    files = sorted(src.rglob("*.parquet"))
-    now = time.time()
-    for i, f in enumerate(files):
-        dst = src / f"part-{i}.parquet"
-        shutil.copy(f, dst)
-        # the file source orders new files by mtime: pin strictly
-        # ascending mtimes so chunk replay order is deterministic
-        os.utime(dst, (now + i, now + i))
-        shutil.rmtree(f.parent)
-    return str(src)
+    return _write_chunks(spark, tmp_path / "events", chunks)
 
 
 def test_ttl_eviction_emits_session_closures(spark, events_dir, tmp_dirs):
-    stream = read_page_events_stream(spark, events_dir, max_files_per_trigger=1)
-    enriched = cep_enrich(
-        stream, watermark_delay="10 minutes", ttl_ms=60_000, emit_closures=True
-    )
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("ttl_out")
-        .outputMode("append")
-        .option("checkpointLocation", tmp_dirs["checkpoint"])
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.table("ttl_out").toPandas()
+    _, out = _run_closures(spark, events_dir, tmp_dirs["checkpoint"], "ttl_out")
     closed = out[out["event_type"] == "session_closed"]
     # host a went idle: both its live urls get a closure record with the
     # final state snapshot
@@ -84,3 +91,25 @@ def test_ttl_eviction_emits_session_closures(spark, events_dir, tmp_dirs):
     assert all(r.session_id == 1 for r in a_closed.itertuples())
     # normal enrichment rows unaffected
     assert (out["event_type"] != "session_closed").sum() == 6
+
+
+def test_key_seen_only_in_first_batch_times_out(spark, tmp_path):
+    """Batch 0 runs with no watermark yet. A host seen only there must
+    still arm its idle deadline (from its newest event time), so it
+    expires once later batches move the watermark past it."""
+    h = dt.timedelta(hours=1)
+    chunks = [
+        [(1, "http://c.example/x", "c.example", T0, "crawl", None)],
+        [(2, "http://b.example/x", "b.example", T0 + 1 * h, "crawl", None)],
+        [(3, "http://b.example/x", "b.example", T0 + 3 * h, "recrawl", None)],
+        [(4, "http://b.example/x", "b.example", T0 + 4 * h, "recrawl", None)],
+    ]
+    events_dir = _write_chunks(spark, tmp_path / "events", chunks)
+    q, out = _run_closures(spark, events_dir, str(tmp_path / "ckpt"), "ttl_batch0")
+    closed = out[out["event_type"] == "session_closed"]
+    assert sorted(closed["host"]) == ["b.example", "c.example"]
+    c = closed[closed["host"] == "c.example"].iloc[0]
+    crawl = out[out["event_id"] == 1].iloc[0]
+    assert (c.url, c.crawl_count, c.prior_ts_us) == (crawl.url, 1, crawl.warc_ts_us)
+    # both hosts expired: no state is left behind
+    assert q.lastProgress["stateOperators"][0]["numRowsTotal"] == 0

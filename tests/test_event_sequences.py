@@ -105,3 +105,33 @@ def test_soak_tool_reads_listener_state_series(spark, events_dir, tmp_dirs):
     assert len(with_input) >= 5  # one per input file
     assert sum(r["rows_in"] for r in with_input) == 10
     assert all(r["state_rows"] >= 0 and r["state_bytes"] > 0 for r in series)
+
+
+def test_batch_frame_equals_rule_spec_per_host(spark, events_dir):
+    """On a batch frame ``cep_enrich`` runs the keyed-state runner's
+    twin: each host is stepped once, on fresh state, over all its
+    events. That must equal the pure ``apply_rules`` spec per host."""
+    from pyspark.sql import functions as F
+
+    from gush_spark.streaming.cep import CEP_OUTPUT_SCHEMA, apply_rules, cep_enrich
+    from gush_spark.streaming.source import read_page_events_batch
+
+    ev = read_page_events_batch(spark, events_dir)
+    got = cep_enrich(ev).toPandas()
+    pdf = ev.select(
+        "host", "event_id", "url",
+        F.unix_micros(F.col("warc_ts").cast("timestamp")).alias("warc_ts_us"),
+        "event_type",
+    ).toPandas()
+
+    def norm(df):
+        cols = [f.name for f in CEP_OUTPUT_SCHEMA.fields]
+        ints = {c: "int64" for c in ("event_id", "warc_ts_us", "crawl_count", "session_id")}
+        return df[cols].astype({**ints, "prior_ts_us": "Int64"})
+
+    want = pd.concat([norm(apply_rules(g, {})) for _, g in pdf.groupby("host")])
+    assert len(got) == len(want) == len(canonical_event_sequences())
+    pd.testing.assert_frame_equal(
+        norm(got).sort_values("event_id").reset_index(drop=True),
+        want.sort_values("event_id").reset_index(drop=True),
+    )

@@ -18,10 +18,10 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from gush_spark.config import duration_us as _delay_us
 from gush_spark.functions.page_features import with_page_features
 from gush_spark.sources.fixtures import render_html
 from gush_spark.streaming.dedup import (
-    _delay_us,
     near_dedup_pages_stream,
     near_dup_candidates_stream,
     with_band_signatures,
