@@ -198,6 +198,23 @@ def bench_ann_index(spark) -> dict:
     return out
 
 
+def steady_stats(progress: list[tuple[int, int, float]]) -> dict:
+    """Steady-state rate and p95 from ``(batch_id, input_rows, seconds)``
+    per microbatch. Steady excludes batch 0 (python-worker spawn,
+    codegen, RocksDB init) and the empty AvailableNow tail batch; the
+    p95 is the nearest rank (sorted sample at index ⌊0.95·n⌋, clamped)
+    over those same batches, with its sample count beside it."""
+    steady = [(r, d) for b, r, d in progress if b > 0 and r > 0]
+    secs = sorted(d for _, d in steady)
+    return {
+        "steady_pages_per_sec":
+            round(sum(r for r, _ in steady) / sum(secs), 1) if steady else None,
+        "p95_batch_sec":
+            round(secs[min(len(secs) - 1, int(0.95 * len(secs)))], 3) if secs else None,
+        "p95_samples": len(secs),
+    }
+
+
 def bench_streaming(spark) -> dict:
     """Two runs of ``_stream_once`` with BOTH disclosed — the same
     min-of-2-warm-runs convention as the query section, because a
@@ -256,20 +273,13 @@ def _stream_once(spark) -> dict:
         for p in query.recentProgress
         if p.batchDuration
     ]
-    batch_secs = sorted(d for _, _, d in progress)
-    p95 = batch_secs[min(len(batch_secs) - 1, int(0.95 * len(batch_secs)))] if batch_secs else None
-    # steady-state = excluding batch 0 (python-worker spawn, codegen,
-    # RocksDB init) and the empty AvailableNow tail batch
-    steady = [(r, d) for b, r, d in progress if b > 0 and r > 0]
-    steady_pps = round(sum(r for r, _ in steady) / sum(d for _, d in steady), 1) if steady else None
     shutil.rmtree(work, ignore_errors=True)
     return {
         "pages": BENCH_PAGES,
         "wall_sec": round(wall, 3),
         "pages_per_sec": round(BENCH_PAGES / wall, 1),
-        "steady_pages_per_sec": steady_pps,
-        "p95_batch_sec": round(p95, 3) if p95 is not None else None,
-        "n_batches": len(batch_secs),
+        **steady_stats(progress),
+        "n_batches": len(progress),
     }
 
 

@@ -9,10 +9,10 @@ The reference's observability is one log line per event
   durations, state-store metrics, watermark — appended as JSONL;
 - ``observe()`` named metrics on the DataFrame count error rows and
   dropped-late rows JVM-side (no extra action, no Python);
-- ``partition_lineage`` computes per-shuffle-partition row counts
-  inside foreachBatch — the per-partition lineage record. It is one
-  extra Spark job per microbatch that re-executes the written frame's
-  plan (the frame is not cached).
+- ``partition_lineage`` writes the per-partition lineage record of a
+  microbatch from the row counts the sink read off the footers of the
+  files it just wrote (``IdempotentKeyedSink.write_batch``) — no
+  Spark job, nothing recomputed.
 """
 
 from __future__ import annotations
@@ -81,25 +81,21 @@ def with_observed_metrics(df: DataFrame, name: str = "gush_metrics") -> DataFram
     )
 
 
-def partition_lineage(batch_df: DataFrame, batch_id: int, out_path: str | Path) -> None:
+def partition_lineage(partitions: dict[int, int], batch_id: int,
+                      out_path: str | Path) -> None:
     """Per-partition row counts for one microbatch → JSONL.
 
     Records which physical partition contributed how many rows (the
-    resume/audit trail the north_rule asks for). This is one extra
-    Spark job: the frame is not cached (``pipeline._run`` persists the
-    microbatch only for curation's gated path), so the count
-    re-executes the written frame's plan.
+    resume/audit trail the north_rule asks for). ``partitions`` is the
+    map ``IdempotentKeyedSink.write_batch`` returns: rows per write-task
+    partition id, taken from the written files' parquet footers, so
+    this runs no Spark action.
     """
-    counts = (
-        batch_df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .count()
-        .collect()
-    )
     rec = {
         "kind": "partition_lineage",
         "batch_id": batch_id,
-        "partitions": {str(r["partition_id"]): r["count"] for r in counts},
-        "total_rows": int(sum(r["count"] for r in counts)),
+        "partitions": {str(k): n for k, n in partitions.items()},
+        "total_rows": int(sum(partitions.values())),
     }
     out_path = Path(out_path)
     out_path.parent.mkdir(parents=True, exist_ok=True)

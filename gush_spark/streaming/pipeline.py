@@ -48,11 +48,12 @@ def _run(
     """The one streaming runner every pipeline starts through.
 
     Per microbatch: optional ``step(batch_df)`` → ``sink.write_batch``
-    → ``partition_lineage`` of the frame that was written (when
-    ``lineage_path`` is set). ``persist`` pins the microbatch for the
-    whole body, so a step that reads it several times and the lineage
-    pass do not recompute its upstream. Both callees are looked up by
-    name at call time, so tracing can patch them. Returns
+    → ``partition_lineage`` of the per-partition row counts the sink
+    read off the footers of the files it wrote (when ``lineage_path``
+    is set; no extra Spark job). ``persist`` pins the microbatch for the
+    whole body, so a step that reads it several times does not
+    recompute its upstream. Both callees are called positionally and
+    looked up by name at call time, so tracing can patch them. Returns
     ``(query, sink)``."""
 
     def write(batch_df, batch_id):
@@ -60,9 +61,9 @@ def _run(
             batch_df = batch_df.persist()
         try:
             out = batch_df if step is None else step(batch_df)
-            sink.write_batch(out, batch_id)
+            parts = sink.write_batch(out, batch_id)
             if lineage_path:
-                partition_lineage(out, batch_id, lineage_path)
+                partition_lineage(parts, batch_id, lineage_path)
         finally:
             if persist:
                 batch_df.unpersist()

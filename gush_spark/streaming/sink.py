@@ -10,7 +10,9 @@ Design (Iceberg ``MERGE INTO`` analog, sandbox-safe):
 - data for batch N lands under ``data/batch=N/`` (written fully before
   commit);
 - a commit marker ``_commits/N`` is created atomically (tmp + rename)
-  AFTER the data write;
+  AFTER the data write; it holds the batch's rows per write-task
+  partition, read off the written files' parquet footers (the
+  per-partition lineage, at no extra Spark job);
 - a replayed batch N (restart between data-write and marker, or between
   marker and offset-commit) sees the marker and skips — rewriting the
   same deterministic rows is also safe because readers only see
@@ -30,6 +32,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import uuid
 from pathlib import Path
 
@@ -37,19 +40,30 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def _parquet_row_count(path: str) -> int | None:
-    """Row count from parquet footers on a driver-visible path."""
-    try:
+_PART_FILE = re.compile(r"part-(\d+)-")
+
+
+def _partition_rows(spark: SparkSession, path: str) -> dict[int, int]:
+    """Rows per write-task partition id of one written batch dir, from its
+    parquet footers (metadata only: nothing upstream is recomputed).
+
+    Spark names each task's output ``part-NNNNN-*``, NNNNN being the
+    partition id, so this is the per-partition count of the frame that
+    was written. Several files of one id add up; zero-row files (Spark
+    writes one for an all-empty frame) are left out."""
+    p = Path(path)
+    if p.exists():
         import pyarrow.parquet as pq
 
-        p = Path(path)
-        if not p.exists():
-            return None
-        return sum(
-            pq.ParquetFile(f).metadata.num_rows for f in p.glob("*.parquet")
-        )
-    except Exception:
-        return None
+        files = [(f.name, pq.ParquetFile(f).metadata.num_rows) for f in p.glob("*.parquet")]
+    else:  # not on the driver's filesystem: one scan of the written files
+        files = spark.read.parquet(path).groupBy(F.input_file_name()).count().collect()
+    counts: dict[int, int] = {}
+    for name, n in files:
+        if n:
+            pid = int(_PART_FILE.match(name.rsplit("/", 1)[-1]).group(1))
+            counts[pid] = counts.get(pid, 0) + n
+    return dict(sorted(counts.items()))
 
 
 class IdempotentKeyedSink:
@@ -93,8 +107,14 @@ class IdempotentKeyedSink:
         ids = [int(p.name) for p in comp.iterdir() if not p.name.startswith(".")]
         return max(ids) if ids else None
 
-    def write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def write_batch(self, batch_df: DataFrame, batch_id: int) -> dict[int, int]:
         """The foreachBatch body. Safe under replay.
+
+        Returns the batch's rows per write-task partition id, zero-row
+        partitions left out (``{}`` for an empty batch) — the
+        per-partition lineage, read from the written files' footers and
+        kept in the commit marker as ``partitions`` beside their sum
+        ``rows``.
 
         A replayed batch skips the sink write BUT must still consume
         every partition: a stateful upstream (windowed agg, dedup, CEP)
@@ -104,21 +124,30 @@ class IdempotentKeyedSink:
         but got 0") — the noop-format write materializes the full plan
         (state commits included) without touching the sink. Found by the
         spark-submit packaging smoke: restarting the featurize pipeline
-        against an already-committed sink killed the query on batch 0."""
+        against an already-committed sink killed the query on batch 0.
+        It returns the map its first write committed."""
         if self.is_committed(batch_id):
             batch_df.write.format("noop").mode("overwrite").save()
-            return  # replayed batch: already visible, nothing rewritten
+            return self._committed_partitions(batch_df.sparkSession, batch_id)
         out = str(self.root / "data" / f"batch={batch_id}")
-        # one computation only: write the files, then take the committed row
-        # count from the parquet footers (metadata-only read — no recompute
-        # of the upstream extraction/shuffle/agg, no extra Spark job).
         batch_df.write.mode("overwrite").parquet(out)
-        rows = _parquet_row_count(out)
-        if rows is None:  # non-local sink path: fall back to a Spark scan
-            rows = batch_df.sparkSession.read.parquet(out).count()
+        parts = _partition_rows(batch_df.sparkSession, out)
         tmp = self.root / "_commits" / f".tmp-{uuid.uuid4().hex}"
-        tmp.write_text(json.dumps({"batch_id": batch_id, "rows": rows}))
+        tmp.write_text(json.dumps(
+            {"batch_id": batch_id, "rows": sum(parts.values()), "partitions": parts}))
         os.rename(tmp, self._marker(batch_id))  # atomic commit point
+        return parts
+
+    def _committed_partitions(self, spark: SparkSession, batch_id: int) -> dict[int, int]:
+        """The per-partition row map committed batch ``batch_id`` wrote.
+        A marker from before markers carried ``partitions`` has only
+        ``rows``: its map comes from the batch dir's footers, or is
+        ``{}`` once ``compact()`` has retired that dir."""
+        marker = json.loads(self._marker(batch_id).read_text())
+        if "partitions" in marker:
+            return {int(k): n for k, n in marker["partitions"].items()}
+        out = str(self.root / "data" / f"batch={batch_id}")
+        return _partition_rows(spark, out) if Path(out).exists() else {}
 
     def foreach_batch(self):
         return lambda df, bid: self.write_batch(df, bid)

@@ -31,7 +31,8 @@ def tmp_dirs(tmp_path):
 def assert_lineage_per_batch():
     """Checks a pipeline's lineage file against its sink: exactly one
     ``partition_lineage`` record per committed batch, whose
-    ``total_rows`` is the row count that batch committed."""
+    ``total_rows`` is the row count that batch committed and whose
+    ``partitions`` are the commit marker's and sum to ``total_rows``."""
 
     def check(sink, lineage_path):
         records = [
@@ -39,12 +40,16 @@ def assert_lineage_per_batch():
             for line in Path(lineage_path).read_text().splitlines()
         ]
         records = [r for r in records if r["kind"] == "partition_lineage"]
-        committed = {
-            b: json.loads((sink.root / "_commits" / str(b)).read_text())["rows"]
+        markers = {
+            b: json.loads((sink.root / "_commits" / str(b)).read_text())
             for b in sink.committed_batches()
         }
+        committed = {b: m["rows"] for b, m in markers.items()}
         assert committed
         assert sorted(r["batch_id"] for r in records) == sorted(committed)
         assert {r["batch_id"]: r["total_rows"] for r in records} == committed
+        for r in records:
+            assert r["partitions"] == markers[r["batch_id"]]["partitions"]
+            assert sum(r["partitions"].values()) == r["total_rows"]
 
     return check
