@@ -6,7 +6,9 @@ The reference's observability is one log line per event
 
 - ``LineageListener`` (a StreamingQueryListener — the S2 analog)
   captures every microbatch's progress: batchId, rows in/out,
-  durations, state-store metrics, watermark — appended as JSONL;
+  durations, state-store metrics (rows, bytes, late drops, and the
+  commit, update and removal times per state operator), watermark —
+  appended as JSONL;
 - ``observe()`` named metrics on the DataFrame count error rows and
   dropped-late rows JVM-side (no extra action, no Python);
 - ``partition_lineage`` writes the per-partition lineage record of a
@@ -49,6 +51,12 @@ class LineageListener(StreamingQueryListener):
                     "num_rows_updated": s.numRowsUpdated,
                     "memory_used_bytes": s.memoryUsedBytes,
                     "num_rows_dropped_by_watermark": s.numRowsDroppedByWatermark,
+                    # state-store time: the commit, the data pass and the
+                    # removals (for the keyed-state runner, its
+                    # event-time-timeout pass)
+                    "commit_time_ms": s.commitTimeMs,
+                    "all_updates_time_ms": s.allUpdatesTimeMs,
+                    "all_removals_time_ms": s.allRemovalsTimeMs,
                 }
                 for s in (p.stateOperators or [])
             ],

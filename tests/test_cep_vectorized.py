@@ -9,7 +9,12 @@ import random
 import pandas as pd
 import pytest
 
-from gush_spark.streaming.cep import CEP_OUTPUT_SCHEMA, apply_rules, apply_rules_fast
+from gush_spark.streaming.cep import (
+    CEP_OUTPUT_SCHEMA,
+    SESSION_GAP_US,
+    apply_rules,
+    apply_rules_fast,
+)
 
 COLS = ["host", "event_id", "url", "warc_ts_us", "event_type"]
 
@@ -146,3 +151,42 @@ def test_fast_matches_spec_randomized_and_across_batches():
             assert {k: tuple(v) for k, v in s_spec.items()} == {
                 k: tuple(v) for k, v in s_fast.items()
             }, f"trial {trial}"
+
+    # runner-shaped input: rows arrive out of order (as in the stream's
+    # files), timestamps tie and are broken by event_id, deltas sit
+    # exactly on the session gap, and the host arrives with state that
+    # drop and purge rows hit
+    gap = SESSION_GAP_US
+    for trial in range(300):
+        n = rng.randint(7, 60)  # > 7 distinct ts values with the purge row
+        ids = rng.sample(range(1000), n)
+        rows = [
+            (
+                "h",
+                ids[i],
+                f"u{rng.randint(0, 6)}",
+                rng.choice([0, 1, gap, gap + 1, 2 * gap, 2 * gap + 1, 3 * gap]),
+                rng.choice(kinds),
+            )
+            for i in range(n)
+        ]
+        init = {
+            f"u{j}": (rng.choice([-gap, -1, 0, 1]), rng.randint(1, 5), rng.randint(1, 5))
+            for j in range(7)
+            if rng.random() < 0.6
+        }
+        # a purge on a url that has state
+        stateful = sorted(init) or ["u0"]
+        rows.append(("h", 1000 + trial, rng.choice(stateful), rng.choice([0, gap]), "purge"))
+        rng.shuffle(rows)
+        assert len({r[3] for r in rows}) < len(rows)  # ts ties present
+        cut = rng.randint(0, len(rows))
+        s_spec = dict(init)
+        s_fast = dict(init)
+        for chunk in (rows[:cut], rows[cut:]):
+            if not chunk:
+                continue
+            spec = apply_rules(_pdf(chunk), s_spec)
+            fast = apply_rules_fast(_pdf(chunk), s_fast)
+            pd.testing.assert_frame_equal(_norm(spec), _norm(fast))
+            assert s_spec == s_fast, f"runner-shaped trial {trial}"

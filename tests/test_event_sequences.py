@@ -81,6 +81,40 @@ def test_lineage_written_per_batch(spark, events_dir, tmp_dirs):
     assert len(recs) >= 5  # one per microbatch
 
 
+def test_listener_records_state_timings(spark, events_dir, tmp_dirs, tmp_path):
+    """Each state operator in the LineageListener's progress record
+    carries its state-store commit, update and removal times (the
+    removal time of applyInPandasWithState is its event-time-timeout
+    pass)."""
+    import json
+    import time
+
+    from gush_spark.streaming.metrics import LineageListener
+
+    out = tmp_path / "progress.jsonl"
+    listener = LineageListener(out)
+    spark.streams.addListener(listener)
+    try:
+        query, _sink = cep_pipeline(
+            spark, events_dir, tmp_dirs["sink"], tmp_dirs["checkpoint"],
+            config=CFG, available_now=True, max_files_per_trigger=1,
+        )
+        query.awaitTermination(120)
+        recs: list = []
+        for _ in range(100):  # listener callbacks are async
+            recs = [json.loads(line) for line in out.read_text().splitlines()]
+            if any(r["kind"] == "terminated" for r in recs):
+                break
+            time.sleep(0.2)
+    finally:
+        spark.streams.removeListener(listener)
+    ops = [s for r in recs if r["kind"] == "progress" for s in r["state_operators"]]
+    assert len(ops) >= 5  # one per microbatch
+    for s in ops:
+        for key in ("commit_time_ms", "all_updates_time_ms", "all_removals_time_ms"):
+            assert isinstance(s[key], int) and s[key] >= 0, (key, s)
+
+
 def test_soak_tool_reads_listener_state_series(spark, events_dir, tmp_dirs):
     """tools/soak_state.py takes its per-batch state series from the
     LineageListener's JSONL records; pin that path on a small stateful
