@@ -99,7 +99,6 @@ def extract_text(html: bytes) -> tuple[str | None, str | None]:
 EXTRACT_SCHEMA = T.StructType(
     [
         T.StructField("text", T.StringType()),
-        T.StructField("segments", T.ArrayType(T.StringType())),
         T.StructField("n_segments", T.IntegerType()),
         T.StructField("extract_error", T.StringType()),
     ]
@@ -107,21 +106,18 @@ EXTRACT_SCHEMA = T.StructType(
 
 
 def _extract_batch(htmls: pd.Series) -> pd.DataFrame:
-    texts, segs, nsegs, errs = [], [], [], []
+    texts, nsegs, errs = [], [], []
     for h in htmls:
         if h is None:
-            texts.append(None); segs.append(None); nsegs.append(None)
-            errs.append("null html")
+            texts.append(None); nsegs.append(None); errs.append("null html")
             continue
         segments, err = extract_segments(bytes(h))
         if err is not None:
-            texts.append(None); segs.append(None); nsegs.append(None); errs.append(err)
+            texts.append(None); nsegs.append(None); errs.append(err)
         else:
-            texts.append("\n".join(segments)); segs.append(segments)
-            nsegs.append(len(segments)); errs.append(None)
+            texts.append("\n".join(segments)); nsegs.append(len(segments)); errs.append(None)
     return pd.DataFrame(
-        {"text": texts, "segments": segs, "n_segments": pd.array(nsegs, dtype="Int32"),
-         "extract_error": errs}
+        {"text": texts, "n_segments": pd.array(nsegs, dtype="Int32"), "extract_error": errs}
     )
 
 
@@ -184,12 +180,18 @@ def with_extracted_text(
 def with_exploded_segments(df: DataFrame, html_col: str = "html") -> DataFrame:
     """P9 analog of gush's mapConcat (SqlToBinlog.scala:15): one page →
     N segment rows, flattened. Error rows survive with a NULL segment
-    (posexplode_outer keeps them — the error channel must not drop)."""
+    (posexplode_outer keeps them — the error channel must not drop).
+
+    The segments are the text split back on ``\\n``: P8 collapses every
+    newline inside a segment, so the split is exact, and Spark's
+    ``split`` keeps empty segments (``'a\\n'`` → ``['a', '']``). A page
+    with zero segments has text ``''``, so it gets a NULL array and one
+    NULL segment row, as an error row does."""
     ext = extract_udf(F.col(html_col)).alias("_ext")
-    exploded = (
+    segments = F.when(F.col("_ext.n_segments") > 0, F.split(F.col("_ext.text"), "\n"))
+    return (
         df.withColumn("_ext", ext)
-        .select("*", F.posexplode_outer("_ext.segments").alias("segment_idx", "segment"),
+        .select("*", F.posexplode_outer(segments).alias("segment_idx", "segment"),
                 F.col("_ext.extract_error").alias("extract_error"))
         .drop("_ext")
     )
-    return exploded

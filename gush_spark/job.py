@@ -188,46 +188,52 @@ def main(argv: list[str] | None = None) -> int:
 
         config = dataclasses.replace(config, input_format=args.input_format)
     spark = build_cluster_session(f"gushspark_{args.pipeline}")
-    if args.lineage:
-        spark.streams.addListener(LineageListener(args.lineage))
-    # parquet-path flags become frames (and the LM) once a session exists
-    for key in ("bench_keys", "bench_bitmap", "lm_model"):
-        if key in kwargs:
-            kwargs[key] = spark.read.parquet(kwargs[key])
-    if "lm_model" in kwargs:
-        from gush_spark.operators.lm import train_bigram_lm
+    try:
+        if args.lineage:
+            spark.streams.addListener(LineageListener(args.lineage))
+        # parquet-path flags become frames (and the LM) once a session exists
+        for key in ("bench_keys", "bench_bitmap", "lm_model"):
+            if key in kwargs:
+                kwargs[key] = spark.read.parquet(kwargs[key])
+        if "lm_model" in kwargs:
+            from gush_spark.operators.lm import train_bigram_lm
 
-        kwargs["lm_model"] = train_bigram_lm(kwargs["lm_model"], "doc_id", "text")
-    pipeline = PIPELINES[args.pipeline]
+            kwargs["lm_model"] = train_bigram_lm(kwargs["lm_model"], "doc_id", "text")
+        pipeline = PIPELINES[args.pipeline]
 
-    def start():
-        return pipeline(
-            spark,
-            args.input,
-            sink_path=args.sink,
-            checkpoint_path=args.checkpoint,
-            config=config,
-            **kwargs,
-        )
+        def start():
+            return pipeline(
+                spark,
+                args.input,
+                sink_path=args.sink,
+                checkpoint_path=args.checkpoint,
+                config=config,
+                **kwargs,
+            )
 
-    if args.max_restarts > 0:
-        _query, sink, _n_restarts = run_supervised(
-            start, max_restarts=args.max_restarts, lineage_path=args.lineage
-        )
-    else:
-        query, sink = start()
-        query.awaitTermination()
-    if args.anomaly_k is not None:
-        from gush_spark.streaming.pipeline import read_host_anomalies
+        if args.max_restarts > 0:
+            _query, sink, _n_restarts = run_supervised(
+                start, max_restarts=args.max_restarts, lineage_path=args.lineage
+            )
+        else:
+            query, sink = start()
+            query.awaitTermination()
+        if args.anomaly_k is not None:
+            from gush_spark.streaming.pipeline import read_host_anomalies
 
-        report = read_host_anomalies(spark, sink, k_sq=args.anomaly_k**2)
-        report.write.mode("overwrite").parquet(f"{args.sink}_anomalies")
-    if args.recrawl_topk is not None:
-        from gush_spark.streaming.pipeline import read_recrawl_priorities
+            report = read_host_anomalies(spark, sink, k_sq=args.anomaly_k**2)
+            report.write.mode("overwrite").parquet(f"{args.sink}_anomalies")
+        if args.recrawl_topk is not None:
+            from gush_spark.streaming.pipeline import read_recrawl_priorities
 
-        schedule = read_recrawl_priorities(spark, sink, k=args.recrawl_topk)
-        schedule.write.mode("overwrite").parquet(f"{args.sink}_recrawl")
-    return 0
+            schedule = read_recrawl_priorities(spark, sink, k=args.recrawl_topk)
+            schedule.write.mode("overwrite").parquet(f"{args.sink}_recrawl")
+        return 0
+    finally:
+        # the listener bus is asynchronous: stopping drains it while the
+        # Python callback server is still up, so the LineageListener
+        # writes the last progress records and the terminated one
+        spark.stop()
 
 
 if __name__ == "__main__":

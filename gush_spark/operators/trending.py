@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from gush_spark.functions.text_analysis import words_of
+from gush_spark.operators.windows import windowed_agg
 
 
 def windowed_term_counts(
@@ -44,20 +45,15 @@ def windowed_term_counts(
         F.col(ts_col).alias("_ts"),
         F.explode(words_of(F.col(text_col))).alias("term"),
     ).filter(F.col("term") != "")
-    win = F.window(F.col("_ts"), window_duration)
+    win = F.window(F.col("_ts"), window_duration).alias("w")
     if hash_terms:
-        counted = (
-            toks.withColumn("tk", F.md5("term"))
-            .groupBy(win.alias("w"), "tk")
-            .agg(F.count(F.lit(1)).alias("n"), F.min("term").alias("term"))
+        counted = windowed_agg(
+            toks.withColumn("tk", F.md5("term")), win, ["tk"],
+            [F.count(F.lit(1)).alias("n"), F.min("term").alias("term")],
         )
     else:
-        counted = toks.groupBy(win.alias("w"), "term").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-    return counted.select(
-        F.col("w.start").alias("window_start"), "term", "n"
-    )
+        counted = windowed_agg(toks, win, ["term"], [F.count(F.lit(1)).alias("n")])
+    return counted.select("window_start", "term", "n")
 
 
 def top_terms_per_window(counts: DataFrame, k: int) -> DataFrame:

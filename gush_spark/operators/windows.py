@@ -1,14 +1,19 @@
-"""Windowed aggregations — batch and streaming forms (SURVEY.md §2.5/§2.6).
+"""Event-time window aggregation — batch and streaming (SURVEY.md §2.5/§2.6).
 
 The reference's only windows are processing-time tumbling batches via
 ``groupedWithin`` feeding a count (cep/Cep.scala:29-35) or a mean
 (cep/Cep.scala:37-49). Our engine is event-time end-to-end: tumbling,
 sliding and session windows on the event timestamp with watermarks.
 
-Batch variants below are the DuckDB-oracle-checkable forms the driver
-verifies; the streaming variants apply the identical expressions on a
-streaming DataFrame plus ``withWatermark`` (incremental state handled by
-Spark's StateStoreSave — SURVEY.md §4.2).
+``windowed_agg`` is the one place a window becomes output columns:
+every windowed operator in the engine (the streaming pipelines, the
+quality monitor, the sketches, trending terms and the catalog queries)
+groups through it and gets ``window_start``/``window_end`` back in
+place of the window struct. The caller builds the window column and,
+on a stream, adds the watermark; the aggregation is the same on a
+batch frame, which is what the stream≡batch tests compare. The
+keyed-state window key the heavy-hitter and sampler machines shard on
+is built next to their runner (streaming/heavy_hitters.window_shard_key).
 
 Scale notes: windowed groupBy is a hash aggregation with map-side partial
 aggregation — one shuffle on (key, window). For skewed keys use
@@ -34,14 +39,23 @@ def session(ts_col: str, gap: str) -> Column:
     return F.session_window(F.col(ts_col), gap)
 
 
-def _flatten_window(df: DataFrame, struct_col: str = "window") -> DataFrame:
-    """Replace the window struct with sortable start/end columns (stable
-    names keep the oracle comparison honest)."""
-    return df.select(
-        F.col(f"{struct_col}.start").alias("window_start"),
-        F.col(f"{struct_col}.end").alias("window_end"),
-        *[c for c in df.columns if c != struct_col],
-    ).drop(struct_col)
+def windowed_agg(df: DataFrame, window: Column, keys, aggs) -> DataFrame:
+    """``aggs`` per (``window``, ``keys``) with the window struct replaced
+    by ``window_start``/``window_end`` in front of the keys and
+    aggregates (stable names keep the oracle comparison honest).
+
+    ``window`` is grouped on exactly as given, alias included, so the
+    analyzed plan and a stream's state-store key schema are those of a
+    plain ``groupBy(window, *keys)``; the struct's name is read back
+    from the aggregate's first column. A caller that keeps only the
+    start drops ``window_end``, and Catalyst prunes it."""
+    out = df.groupBy(window, *keys).agg(*aggs)
+    struct, *rest = out.columns
+    return out.select(
+        F.col(f"{struct}.start").alias("window_start"),
+        F.col(f"{struct}.end").alias("window_end"),
+        *rest,
+    )
 
 
 def windowed_count(
@@ -50,29 +64,13 @@ def windowed_count(
     """A1 analog (WindowedInsertCount, cep/Cep.scala:29-35): events per
     (window, keys). Tumbling when ``slide`` is None, else sliding."""
     win = sliding(ts_col, duration, slide) if slide else tumbling(ts_col, duration)
-    out = df.groupBy(win, *[F.col(k) for k in keys]).agg(F.count(F.lit(1)).alias("n_events"))
-    return _flatten_window(out)
-
-
-def windowed_avg(
-    df: DataFrame, ts_col: str, value: Column, duration: str, *keys: str
-) -> DataFrame:
-    """A2 analog (WindowedInsertsAvg, cep/Cep.scala:37-49): mean of a
-    numeric projection per window. Spark's avg of an empty/all-null group
-    is NULL ≙ the reference's ``None`` (Try(...).toOption)."""
-    out = df.groupBy(tumbling(ts_col, duration), *[F.col(k) for k in keys]).agg(
-        F.avg(value).alias("avg_value")
-    )
-    return _flatten_window(out)
+    return windowed_agg(df, win, keys, [F.count(F.lit(1)).alias("n_events")])
 
 
 def session_count(df: DataFrame, ts_col: str, gap: str, *keys: str) -> DataFrame:
     """Session windows (north_rule addition; no reference analog):
     per-key activity sessions separated by > gap."""
-    out = df.groupBy(session(ts_col, gap), *[F.col(k) for k in keys]).agg(
-        F.count(F.lit(1)).alias("n_events"),
-    )
-    return _flatten_window(out, "session_window")
+    return windowed_agg(df, session(ts_col, gap), keys, [F.count(F.lit(1)).alias("n_events")])
 
 
 def salt_column(

@@ -122,12 +122,12 @@ def all_oracles() -> dict[str, str]:
 def q_field_projection_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     k = F.regexp_extract(F.col("props"), '"k": ([0-9]+)', 1).cast("decimal(18,2)")
-    out = ev.groupBy(windows.tumbling("ts", "10 minutes"), "event_type").agg(
+    out = windows.windowed_agg(ev, windows.tumbling("ts", "10 minutes"), ["event_type"], [
         (F.sum(k).cast("double") / F.count(F.lit(1))).alias("avg_k"),
         F.count(F.lit(1)).alias("n_events"),
-    )
+    ])
     return out.select(
-        F.col("window.start").cast("timestamp").cast("long").alias("window_start_s"),
+        F.col("window_start").cast("timestamp").cast("long").alias("window_start_s"),
         "event_type", "avg_k", "n_events",
     )
 
@@ -442,13 +442,13 @@ def q_tumbling_window_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tumbling_window_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
-    out = ev.groupBy(windows.tumbling("ts", "10 minutes"), "event_type").agg(
+    out = windows.windowed_agg(ev, windows.tumbling("ts", "10 minutes"), ["event_type"], [
         (F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
          / F.count("value")).alias("avg_value"),
         F.count(F.lit(1)).alias("n_events"),
-    )
+    ])
     return out.select(
-        F.col("window.start").cast("timestamp").cast("long").alias("window_start_s"),
+        F.col("window_start").cast("timestamp").cast("long").alias("window_start_s"),
         "event_type",
         "avg_value",
         "n_events",

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gush_spark.functions import text_analysis as ta
-from gush_spark.operators import dedup, similarity
+from gush_spark.operators import dedup, similarity, windows
 from gush_spark.queries import load, query
 
 # ---------------------------------------------------------------------------
@@ -4227,12 +4227,12 @@ def q_host_volume_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gush_spark.operators.trending import volume_anomaly_windows
 
     ev = load(spark, sf_dir, "events")
-    counts = ev.groupBy(
+    counts = windows.windowed_agg(
+        ev, windows.tumbling("ts", "10 minutes"), ["user_id"],
+        [F.count(F.lit(1)).alias("n")],
+    ).select(
         "user_id",
-        F.window("ts", "10 minutes").alias("w"),
-    ).agg(F.count(F.lit(1)).alias("n")).select(
-        "user_id",
-        F.col("w.start").cast("timestamp").cast("long").alias("window_start"),
+        F.col("window_start").cast("timestamp").cast("long").alias("window_start"),
         "n",
     )
     return volume_anomaly_windows(

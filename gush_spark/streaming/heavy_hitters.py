@@ -50,7 +50,7 @@ from __future__ import annotations
 from typing import Callable
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -104,14 +104,20 @@ def windowed_gram_slots(
             F.window(F.col(ts_col), window_duration).alias("w"),
             F.explode(_gram_expr("_ws", n)).alias("gram"),
         )
-        .select(
-            F.col(ts_col),
-            F.unix_micros(F.col("w.start")).alias("window_start_us"),
-            F.unix_millis(F.col("w.end")).alias("window_end_ms"),
-            F.pmod(F.xxhash64("gram"), F.lit(shards)).cast("int").alias("shard"),
-            "gram",
-        )
+        .select(F.col(ts_col), *window_shard_key("w", "gram", shards), "gram")
     )
+
+
+def window_shard_key(window: str, shard_on: str, shards: int) -> list[Column]:
+    """The key ``run_window_summary`` keeps state under, read off the
+    window struct column ``window``: ``window_start_us``,
+    ``window_end_ms`` (the event-time timeout) and
+    ``shard = pmod(xxhash64(shard_on), shards)``."""
+    return [
+        F.unix_micros(F.col(f"{window}.start")).alias("window_start_us"),
+        F.unix_millis(F.col(f"{window}.end")).alias("window_end_ms"),
+        F.pmod(F.xxhash64(shard_on), F.lit(int(shards))).cast("int").alias("shard"),
+    ]
 
 
 def run_window_summary(

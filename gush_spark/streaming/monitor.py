@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from gush_spark.functions.text_analysis import md5_fingerprint, norm_text
 from gush_spark.operators.sketches import finalize_registers
+from gush_spark.operators.windows import windowed_agg
 from gush_spark.streaming.sketches import windowed_hll_registers
 
 
@@ -61,11 +62,8 @@ def windowed_quality_counters(
         (t.isNotNull() & (norm_text(t) == "")).cast("int").alias("_empty"),
         F.length(t).alias("_len"),
     )
-    return (
-        proj.groupBy(
-            F.window(F.col("_ts"), window_duration).alias("w"), *group_cols
-        )
-        .agg(
+    return windowed_agg(
+        proj, F.window(F.col("_ts"), window_duration).alias("w"), group_cols, [
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("_null").alias("n_null_text"),
             F.sum("_empty").alias("n_empty"),
@@ -73,19 +71,8 @@ def windowed_quality_counters(
             F.sum("_len").cast("long").alias("sum_chars"),
             F.min("_len").cast("long").alias("min_chars"),
             F.max("_len").cast("long").alias("max_chars"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            *group_cols,
-            "n_rows",
-            "n_null_text",
-            "n_empty",
-            "n_nonnull",
-            "sum_chars",
-            "min_chars",
-            "max_chars",
-        )
-    )
+        ],
+    ).drop("window_end")
 
 
 def windowed_fingerprint_registers(
@@ -184,17 +171,10 @@ def windowed_length_histogram(
     proj = df.select(
         F.col(ts_col).alias("_ts"), *group_cols, b.alias("bucket")
     )
-    return (
-        proj.groupBy(
-            F.window(F.col("_ts"), window_duration).alias("w"),
-            *group_cols,
-            "bucket",
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .select(
-            F.col("w.start").alias("window_start"), *group_cols, "bucket", "n"
-        )
-    )
+    return windowed_agg(
+        proj, F.window(F.col("_ts"), window_duration).alias("w"),
+        [*group_cols, "bucket"], [F.count(F.lit(1)).cast("long").alias("n")],
+    ).drop("window_end")
 
 
 def drift_monitor_report(

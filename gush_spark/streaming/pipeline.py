@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from gush_spark.config import DEFAULT_CONFIG, GushSparkConfig, duration_us
 from gush_spark.functions.extract import with_extracted_text
 from gush_spark.operators.events import blacklist_filter, host_of, supported_kinds_filter
+from gush_spark.operators.windows import windowed_agg
 from gush_spark.streaming.cep import cep_enrich
 from gush_spark.streaming.metrics import partition_lineage, with_observed_metrics
 from gush_spark.streaming.sink import IdempotentKeyedSink
@@ -81,16 +82,11 @@ def _run(
 def _windowed(df: DataFrame, config: GushSparkConfig, keys: list[str], aggs,
               streaming: bool = True) -> DataFrame:
     """Tumbling ``config.window_duration`` event-time aggregation of
-    ``aggs`` per ``keys`` (watermarked when streaming), the window
-    struct flattened to ``window_start``/``window_end``."""
+    ``aggs`` per ``keys`` (watermarked when streaming) through
+    ``windowed_agg``."""
     if streaming:
         df = df.withWatermark("warc_ts", config.watermark_delay)
-    agg = df.groupBy(F.window("warc_ts", config.window_duration), *keys).agg(*aggs)
-    return agg.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        *agg.columns[1:],
-    )
+    return windowed_agg(df, F.window("warc_ts", config.window_duration), keys, aggs)
 
 
 def _page_counts() -> list:
@@ -186,14 +182,13 @@ def salted_rollup_pipeline(
     checkpoint_path: str,
     config: GushSparkConfig = DEFAULT_CONFIG,
     available_now: bool = True,
-    salt_buckets: int | None = None,
     lineage_path: str | None = None,
 ):
     """Skew-safe streaming rollup (north_rule: salted repartitioning on
     skewed hosts, in the streaming path).
 
     A Zipf-hot host concentrates one (window, host) state key on one
-    reducer; salting splits it into ``salt_buckets`` sub-keys
+    reducer; salting splits it into ``config.skew_salt_buckets`` sub-keys
     (deterministic ``xxhash64(url) mod buckets``), so the stateful
     aggregation fans the hot key over that many state partitions. The
     sink stores the PARTIALS keyed (host, window_start, salt) —
@@ -201,11 +196,10 @@ def salted_rollup_pipeline(
     merges them (counts/sums are decomposable; Spark's update-mode
     semantics are preserved because each partial is itself a complete
     running aggregate for its sub-key)."""
-    buckets = salt_buckets or config.skew_salt_buckets
     stream = read_input_stream(spark, pages_path, config)
     extracted = extracted_pages(stream, config)
     salted = extracted.withColumn(
-        "salt", F.pmod(F.xxhash64(F.col("url")), F.lit(buckets))
+        "salt", F.pmod(F.xxhash64(F.col("url")), F.lit(config.skew_salt_buckets))
     )
     agg = _windowed(salted, config, ["host", "salt"], _page_counts())
     sink = IdempotentKeyedSink(sink_path, keys=["host", "window_start", "salt"])

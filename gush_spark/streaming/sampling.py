@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gush_spark.streaming.heavy_hitters import run_window_summary
+from gush_spark.streaming.heavy_hitters import run_window_summary, window_shard_key
 
 SAMPLE_SCHEMA = T.StructType(
     [
@@ -91,9 +91,7 @@ def windowed_priority_rows(
         ).alias("_u"),
     ).select(
         F.col(ts_col),
-        F.unix_micros(F.col("_w.start")).alias("window_start_us"),
-        F.unix_millis(F.col("_w.end")).alias("window_end_ms"),
-        F.pmod(F.xxhash64("url"), F.lit(int(shards))).cast("int").alias("shard"),
+        *window_shard_key("_w", "url", shards),
         "url",
         "weight",
         F.expr("_u DIV weight").alias("priority"),

@@ -88,10 +88,19 @@ class IdempotentKeyedSink:
         (self.root / "_commits").mkdir(parents=True, exist_ok=True)
         (self.root / "data").mkdir(parents=True, exist_ok=True)
 
-    def _resolution(self) -> list:
-        return [F.col(c).desc() for c in self.resolve_order] + [
-            F.col("batch").desc()
-        ]
+    def _resolve(self, df: DataFrame) -> DataFrame:
+        """Last writer wins: per key, the row highest in
+        ``resolve_order`` and then in batch id (no keys: every row);
+        the batch column is dropped."""
+        if not self.keys:
+            return df.drop("batch")
+        order = [F.col(c).desc() for c in self.resolve_order] + [F.col("batch").desc()]
+        w = Window.partitionBy(*self.keys).orderBy(*order)
+        return (
+            df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn", "batch")
+        )
 
     def _marker(self, batch_id: int) -> Path:
         return self.root / "_commits" / str(batch_id)
@@ -214,15 +223,7 @@ class IdempotentKeyedSink:
 
     def read(self, spark: SparkSession) -> DataFrame:
         """Current view: latest committed version of each key."""
-        df = self._committed_with_batch(spark)
-        if not self.keys:
-            return df.drop("batch")
-        w = Window.partitionBy(*self.keys).orderBy(*self._resolution())
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "batch")
-        )
+        return self._resolve(self._committed_with_batch(spark))
 
     def read_all_appends(self, spark: SparkSession) -> DataFrame:
         """Append-mode view: every committed row exactly once."""
@@ -263,16 +264,7 @@ class IdempotentKeyedSink:
             return prev
         upto = max(live)
         # resolve over the PINNED (prev, live) pair — never re-list
-        df = self._assemble(spark, prev, live)
-        if self.keys:
-            w = Window.partitionBy(*self.keys).orderBy(*self._resolution())
-            resolved = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn", "batch")
-            )
-        else:
-            resolved = df.drop("batch")
+        resolved = self._resolve(self._assemble(spark, prev, live))
         comp_root = self.root / "compacted"
         comp_root.mkdir(exist_ok=True)
         tmp = comp_root / f".tmp-{uuid.uuid4().hex}"

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from gush_spark.operators.sketches import hll_bucket_rho
+from gush_spark.operators.windows import windowed_agg
 
 
 def windowed_hll_registers(
@@ -53,21 +54,12 @@ def windowed_hll_registers(
     if df.isStreaming:
         df = df.withWatermark(ts_col, watermark_delay)
     bucket, rho = hll_bucket_rho(key, m_bits=m_bits)
-    return (
-        df.where(key.isNotNull())  # COUNT DISTINCT semantics, as in batch
-        .groupBy(
-            F.window(F.col(ts_col), window_duration).alias("w"),
-            *group_cols,
-            bucket,
-        )
-        .agg(F.max(rho).alias("m_j"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            *group_cols,
-            "hll_bucket",
-            "m_j",
-        )
-    )
+    return windowed_agg(
+        df.where(key.isNotNull()),  # COUNT DISTINCT semantics, as in batch
+        F.window(F.col(ts_col), window_duration).alias("w"),
+        [*group_cols, bucket],
+        [F.max(rho).alias("m_j")],
+    ).drop("window_end")
 
 
 def windowed_cms_counters(
@@ -110,15 +102,12 @@ def windowed_cms_counters(
             for i in range(d)
         ]
     )
-    return (
-        df.where(key.isNotNull())
-        .select(F.col(ts_col), F.explode(coords).alias("rb"))
-        .groupBy(
-            F.window(F.col(ts_col), window_duration).alias("w"), "rb.r", "rb.b"
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-        .select(F.col("w.start").alias("window_start"), "r", "b", "c")
-    )
+    return windowed_agg(
+        df.where(key.isNotNull()).select(F.col(ts_col), F.explode(coords).alias("rb")),
+        F.window(F.col(ts_col), window_duration).alias("w"),
+        ["rb.r", "rb.b"],
+        [F.count(F.lit(1)).alias("c")],
+    ).drop("window_end")
 
 
 def windowed_histogram_bins(
@@ -144,13 +133,11 @@ def windowed_histogram_bins(
     """
     if df.isStreaming:
         df = df.withWatermark(ts_col, watermark_delay)
-    return (
-        df.where(value.isNotNull())
-        .select(
-            F.col(ts_col),
-            F.floor(value / F.lit(width)).cast("long").alias("bin"),
-        )
-        .groupBy(F.window(F.col(ts_col), window_duration).alias("w"), "bin")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .select(F.col("w.start").alias("window_start"), "bin", "c")
+    binned = df.where(value.isNotNull()).select(
+        F.col(ts_col),
+        F.floor(value / F.lit(width)).cast("long").alias("bin"),
     )
+    return windowed_agg(
+        binned, F.window(F.col(ts_col), window_duration).alias("w"),
+        ["bin"], [F.count(F.lit(1)).alias("c")],
+    ).drop("window_end")

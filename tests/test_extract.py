@@ -130,11 +130,15 @@ def test_udf_explode_segments(spark):
 
     pdf = pd.DataFrame(
         {
-            "url": ["u1", "u2", "u3"],
+            "url": ["u1", "u2", "u3", "u4", "u5", "u6", "u7"],
             "html": [
                 render_html(["a", "b"]),
                 render_html(["c"]),
                 render_html(["x"], malformed=True),
+                render_html([""]),
+                render_html([]),
+                render_html(["a", ""]),
+                render_html([None, "y"]),
             ],
         }
     )
@@ -146,4 +150,10 @@ def test_udf_explode_segments(spark):
         ("u1", 1, "b", False),
         ("u2", 0, "c", False),
         ("u3", None, None, True),  # error row survives the explode (P10)
+        ("u4", 0, "", False),  # one empty segment is a row
+        ("u5", None, None, False),  # zero segments: one NULL row, no error
+        ("u6", 0, "a", False),
+        ("u6", 1, "", False),  # a trailing empty segment is kept
+        ("u7", 0, NULL_TOKEN, False),
+        ("u7", 1, "y", False),
     }

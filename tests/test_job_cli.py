@@ -4,6 +4,12 @@ parse time, before a cluster is provisioned)."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 
 from gush_spark.job import main
@@ -154,3 +160,34 @@ def test_lineage_reaches_every_pipeline(started, pipeline, tmp_path):
     lineage = str(tmp_path / "lineage.jsonl")
     assert main(["--pipeline", pipeline, *BASE, "--lineage", lineage]) == 0
     assert started[0]["lineage_path"] == lineage
+
+
+def test_lineage_keeps_the_last_records(tmp_path):
+    """A real ``python -m gush_spark.job --lineage`` run: by the time the
+    process exits, the asynchronous listener has written one progress
+    record per committed batch and the terminated record, and no
+    listener callback failed at shutdown."""
+    from gush_spark.sources.fixtures import generate_page_events
+
+    events = generate_page_events(tmp_path / "events", n_chunks=6)
+    ckpt, lineage = tmp_path / "ckpt", tmp_path / "lineage.jsonl"
+    repo = Path(__file__).resolve().parent.parent
+    env = {
+        **os.environ,
+        "PYTHONPATH": str(repo),
+        "PYSPARK_SUBMIT_ARGS": "--master local[2] --driver-memory 1g pyspark-shell",
+    }
+    proc = subprocess.run(
+        [sys.executable, "-m", "gush_spark.job", "--pipeline", "cep",
+         "--input", str(events), "--sink", str(tmp_path / "sink"),
+         "--checkpoint", str(ckpt), "--lineage", str(lineage)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    records = [json.loads(line) for line in lineage.read_text().splitlines()]
+    progress = sorted(r["batch_id"] for r in records if r["kind"] == "progress")
+    commits = sorted(int(f.name) for f in (ckpt / "commits").iterdir() if f.name.isdigit())
+    assert len(commits) > 6  # one batch per input file, and more
+    assert progress == commits
+    assert [r["kind"] for r in records].count("terminated") == 1
+    assert "threw an exception" not in proc.stderr

@@ -3,6 +3,7 @@ windowed output must equal the batch computation on the same input, and
 late rows must be dropped deterministically by the watermark.
 """
 
+import dataclasses
 import json
 
 import pandas as pd
@@ -80,8 +81,9 @@ def test_salted_rollup_equals_unsalted(
 
     query, sink = salted_rollup_pipeline(
         spark, pages_dir, tmp_dirs["sink"] + "_salted",
-        tmp_dirs["checkpoint"] + "_salted", config=CFG, available_now=True,
-        salt_buckets=4, lineage_path=tmp_dirs["lineage"],
+        tmp_dirs["checkpoint"] + "_salted",
+        config=dataclasses.replace(CFG, skew_salt_buckets=4), available_now=True,
+        lineage_path=tmp_dirs["lineage"],
     )
     query.awaitTermination(180)
     assert_lineage_per_batch(sink, tmp_dirs["lineage"])
