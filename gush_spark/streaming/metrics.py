@@ -6,8 +6,9 @@ The reference's observability is one log line per event
 
 - ``LineageListener`` (a StreamingQueryListener — the S2 analog)
   captures every microbatch's progress: batchId, rows in/out,
-  durations, state-store metrics (rows, bytes, late drops, and the
-  commit, update and removal times per state operator), watermark —
+  durations, state-store metrics (rows, bytes, late drops, the
+  commit, update and removal times per state operator, and the state
+  provider's ``customMetrics``), watermark —
   appended as JSONL;
 - ``observe()`` named metrics on the DataFrame count error rows and
   dropped-late rows JVM-side (no extra action, no Python);
@@ -57,6 +58,9 @@ class LineageListener(StreamingQueryListener):
                     "commit_time_ms": s.commitTimeMs,
                     "all_updates_time_ms": s.allUpdatesTimeMs,
                     "all_removals_time_ms": s.allRemovalsTimeMs,
+                    # the provider's own metrics (RocksDB: file sync,
+                    # flush and checkpoint latencies, bytes copied)
+                    "custom_metrics": dict(s.customMetrics or {}),
                 }
                 for s in (p.stateOperators or [])
             ],

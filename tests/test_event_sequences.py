@@ -85,7 +85,8 @@ def test_listener_records_state_timings(spark, events_dir, tmp_dirs, tmp_path):
     """Each state operator in the LineageListener's progress record
     carries its state-store commit, update and removal times (the
     removal time of applyInPandasWithState is its event-time-timeout
-    pass)."""
+    pass) and the provider's custom metrics, among them RocksDB's
+    commit file-sync latency."""
     import json
     import time
 
@@ -113,6 +114,8 @@ def test_listener_records_state_timings(spark, events_dir, tmp_dirs, tmp_path):
     for s in ops:
         for key in ("commit_time_ms", "all_updates_time_ms", "all_removals_time_ms"):
             assert isinstance(s[key], int) and s[key] >= 0, (key, s)
+        sync = s["custom_metrics"]["rocksdbCommitFileSyncLatencyMs"]
+        assert isinstance(sync, int) and sync >= 0, s
 
 
 def test_soak_tool_reads_listener_state_series(spark, events_dir, tmp_dirs):

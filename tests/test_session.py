@@ -1,4 +1,8 @@
-"""Local session defaults: the driver heap is sized from physical RAM."""
+"""Local session defaults: the driver heap is sized from physical RAM,
+and checkpoint/state/sink files go through the FileSystem API on the raw
+local filesystem."""
+
+from pathlib import Path
 
 from gush_spark.session import default_driver_memory
 
@@ -13,3 +17,36 @@ def test_driver_memory_capped_at_20g():
 
 def test_driver_memory_falls_back_when_size_unknown():
     assert default_driver_memory("") == "20g"
+
+
+def test_local_checkpoints_skip_hadoop_crc_sidecars(spark, tmp_path, tmp_dirs):
+    """A stateful stream on a local session leaves no hidden
+    ``.<name>.crc`` Hadoop sidecar under its checkpoint or sink (Spark's
+    own ``<v>.changelog.crc`` state checksums are not hidden and may
+    stay), and the checkpoint manager the JVM builds for that checkpoint
+    is the FileSystem-based one."""
+    from gush_spark.config import GushSparkConfig
+    from gush_spark.sources.fixtures import canonical_event_sequences, generate_page_events
+    from gush_spark.streaming.pipeline import cep_pipeline
+
+    events = generate_page_events(tmp_path / "events", canonical_event_sequences(), n_chunks=2)
+    query, sink = cep_pipeline(
+        spark, str(events), tmp_dirs["sink"], tmp_dirs["checkpoint"],
+        config=GushSparkConfig(watermark_delay="10 minutes"),
+        available_now=True, max_files_per_trigger=1,
+    )
+    query.awaitTermination(120)
+    assert sink.committed_batches()
+    ckpt = Path(tmp_dirs["checkpoint"])
+    assert any(ckpt.rglob("*.changelog"))  # the state store did commit
+    sidecars = [
+        p for root in (ckpt, Path(tmp_dirs["sink"])) for p in root.rglob(".*.crc")
+    ]
+    assert sidecars == []
+
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(ckpt)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
