@@ -34,6 +34,13 @@ Pinned extraction spec (mirrors SURVEY.md §2.3 P1-P10):
       document text (the exploded per-segment form is also exposed).
   P10 empty body (zero segments) extracts as the empty string, NOT null
       (gush keeps empty string values, FoundationParserTest.scala:34-39).
+
+P3, P6 and P8 are implemented with anchored searches for explicit ASCII
+case classes (``<[pP]``, ``</[pP]>``), which ``re`` scans for by their
+literal prefix; the comment, entity and whitespace passes are skipped
+where they cannot change the text. ``tests/test_extract_equivalence.py``
+pins the kernel to the regex form of the spec (lazy ``(.*?)`` matches
+under ``re.IGNORECASE``) on generated tag soup.
 """
 
 from __future__ import annotations
@@ -48,9 +55,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
 
 _COMMENT_RE = re.compile(r"<!--.*?-->", re.DOTALL)
-_BODY_RE = re.compile(r"<body[^>]*>(.*?)</body>", re.DOTALL | re.IGNORECASE)
-_SEG_RE = re.compile(r"<p(\s[^>]*)?>(.*?)</p>", re.DOTALL | re.IGNORECASE)
-_WS_RE = re.compile(r"[ \t\r\n]+")
+# P3/P6 tags. re.IGNORECASE folds each of b, o, d, y and p only onto its
+# ASCII pair, so the explicit classes match exactly what the folded
+# patterns did, and re scans for the literal "<" / "</" prefix instead of
+# folding every character (pinned in tests/test_extract_equivalence.py).
+_BODY_OPEN_RE = re.compile(r"<[bB][oO][dD][yY][^>]*>")
+_BODY_CLOSE_RE = re.compile(r"</[bB][oO][dD][yY]>")
+_P_OPEN_RE = re.compile(r"<[pP](\s[^>]*)?>")
+_P_CLOSE_RE = re.compile(r"</[pP]>")
+# P8: every run of [ \t\r\n] other than a lone space (a lone space
+# already is its canonical form)
+_WS_RE = re.compile(r"[\t\r\n][ \t\r\n]*| [ \t\r\n]+")
 # P7 — fixed order, &amp; last
 _ENTITIES = (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"), ("&amp;", "&"))
 
@@ -61,29 +76,44 @@ def extract_segments(html: bytes) -> tuple[list[str] | None, str | None]:
     """Pure-python extraction: html bytes → (segments, error).
 
     Exactly one of the pair is None. This function IS the spec — the
-    pandas UDF below and the fixture generator both call it, so golden
-    tests compare generator output to UDF output byte-for-byte.
+    pandas UDF below calls it, and the fixture generator builds its
+    golden text without it, so golden tests compare generator output to
+    UDF output byte-for-byte.
     """
     try:
         text = html.decode("utf-8", errors="strict")  # P2
     except UnicodeDecodeError as e:
         return None, f"decode_error: {e.reason} at byte {e.start}"
     text = text.replace("\\'", '"')  # P1
-    text = _COMMENT_RE.sub("", text)  # P5
-    body = _BODY_RE.search(text)
-    if body is None:
+    if "<!--" in text:
+        text = _COMMENT_RE.sub("", text)  # P5
+    # P3: the body is from the end of the first <body ...> to the first
+    # </body> after it. When the first opening tag has no ">" or no
+    # closing tag after it, no later opening tag has one either.
+    open_ = _BODY_OPEN_RE.search(text)
+    close = _BODY_CLOSE_RE.search(text, open_.end()) if open_ else None
+    if close is None:
         return None, "malformed: no body element"  # P3
+    body = text[open_.end():close.start()]
     segments: list[str] = []
-    for m in _SEG_RE.finditer(body.group(1)):  # P6
-        attrs = m.group(1) or ""
-        if "data-null" in attrs:  # P4
+    pos = 0
+    while (m := _P_OPEN_RE.search(body, pos)) is not None:  # P6
+        # an opening tag with no </p> after it ends the segments: no
+        # later opening tag can have one either
+        end = _P_CLOSE_RE.search(body, m.end())
+        if end is None:
+            break
+        pos = end.end()
+        if "data-null" in (m.group(1) or ""):  # P4
             segments.append(NULL_TOKEN)
             continue
-        seg = m.group(2)
-        for ent, ch in _ENTITIES:  # P7
-            seg = seg.replace(ent, ch)
-        seg = _WS_RE.sub(" ", seg).strip()  # P8
-        segments.append(seg)
+        seg = body[m.end():end.start()]
+        if "&" in seg:
+            for ent, ch in _ENTITIES:  # P7
+                seg = seg.replace(ent, ch)
+        if "\n" in seg or "\t" in seg or "\r" in seg or "  " in seg:
+            seg = _WS_RE.sub(" ", seg)  # P8
+        segments.append(seg.strip())
     return segments, None
 
 
@@ -126,7 +156,7 @@ def extract_udf(htmls: pd.Series) -> pd.DataFrame:
     """Vectorized Arrow-batched extraction (Series[binary] → struct).
 
     Arrow moves the whole batch JVM↔Python in one shot; the per-value
-    regex pipeline runs inside the batch. This is the engine's only
+    extraction kernel runs inside the batch. This is the engine's only
     Python hot path — everything before it (filters) and after it
     (windows/joins/aggs) stays JVM-side.
     """
