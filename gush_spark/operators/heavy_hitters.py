@@ -79,9 +79,8 @@ def mg_merge(residual: pd.Series, counts: pd.Series, m: int) -> pd.Series:
     """One Misra-Gries merge step: add a batch's value counts into the
     residual summary, then (if more than ``m`` grams are live) subtract
     the (m+1)-th largest residual from all and keep the positive ones.
-    Vectorized Series ops only; shared by the batch per-partition pass
-    and the streaming per-window state update — the MG survival bound
-    (Agarwal et al., mergeable summaries) holds under any merge order."""
+    Vectorized Series ops only — the MG survival bound (Agarwal et al.,
+    mergeable summaries) holds under any merge order."""
     residual = residual.add(counts, fill_value=0).astype("int64")
     if len(residual) > m:
         d = residual.nlargest(m + 1).iloc[-1]

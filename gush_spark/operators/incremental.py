@@ -4,8 +4,9 @@ The daily-crawl pattern: a production corpus is not rebuilt from
 scratch; each day's crawl increment is deduplicated against the
 10^12-page historical index and only the survivors are appended. The
 reference engine has no analog (gush processes a change stream but
-never dedups); this is the batch twin of streaming/dedup.py's
-within-horizon dedup, designed Spark-first.
+never dedups); its exact half is the batch counterpart of
+streaming/dedup.py's within-horizon fingerprint dedup (near-dup has no
+streaming form), designed Spark-first.
 
 Scale design — the corpus NEVER shuffles:
 - the historical index is a materialized artifact: (fingerprint) for

@@ -167,13 +167,8 @@ def finalize_registers(
     m_bits: int = 8,
     out: str = "approx_distinct",
 ) -> DataFrame:
-    """Estimate from a register frame ``(group_cols…, hll_bucket, m_j)``.
-
-    Shared by the batch operator and the streaming windowed sketch
-    (gush_spark/streaming/sketches.py), where the registers are what
-    the stream EMITS — at most ``m`` tiny rows per finalized window —
-    and this finalizer runs at read time.
-    """
+    """Estimate from a register frame ``(group_cols…, hll_bucket, m_j)``,
+    e.g. the output of ``hll_registers``."""
     m = 1 << m_bits
     # Max-merge duplicate (group, bucket) rows first: a sink can hold
     # registers from a resumed run, a re-emit, or a batch backfill for

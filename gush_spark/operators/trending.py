@@ -7,8 +7,7 @@ count is ONE windowed aggregation (streaming: append-mode emit when
 the watermark passes; state is one counter per (window, term-key)
 inside the horizon). The top-k stage is batch-side (read time /
 foreachBatch) because cascaded streaming aggregations are not a thing —
-same layering as streaming/sketches (emit additive state, finalize at
-read).
+the stream emits additive state and the finalize runs at read time.
 
 Scale design: ``hash_terms=True`` (default) shuffles (window,
 16-byte md5) and recovers the term text as ``min(term)`` inside the
@@ -87,10 +86,10 @@ def decayed_term_scores(
     dashboards.
 
     Takes the OUTPUT of ``windowed_term_counts`` (batch frame or the
-    read side of its streaming sink) — read-time finalize, the same
-    layering as streaming/sketches: the stream keeps one additive
-    counter per (window, term); decay is applied when asked, so
-    re-reading later re-decays correctly without touching state.
+    read side of its streaming sink) — read-time finalize: the stream
+    keeps one additive counter per (window, term); decay is applied
+    when asked, so re-reading later re-decays correctly without
+    touching state.
 
     Cross-engine exactness: ages quantize to integer half-life buckets
     (clamped at ``max_buckets``) and each count contributes

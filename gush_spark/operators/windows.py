@@ -6,14 +6,14 @@ The reference's only windows are processing-time tumbling batches via
 sliding and session windows on the event timestamp with watermarks.
 
 ``windowed_agg`` is the one place a window becomes output columns:
-every windowed operator in the engine (the streaming pipelines, the
-quality monitor, the sketches, trending terms and the catalog queries)
-groups through it and gets ``window_start``/``window_end`` back in
-place of the window struct. The caller builds the window column and,
-on a stream, adds the watermark; the aggregation is the same on a
-batch frame, which is what the stream≡batch tests compare. The
-keyed-state window key the heavy-hitter and sampler machines shard on
-is built next to their runner (streaming/heavy_hitters.window_shard_key).
+every windowed operator in the engine (the streaming pipelines,
+trending terms and the catalog queries) groups through it and gets
+``window_start``/``window_end`` back in place of the window struct.
+The caller builds the window column and, on a stream, adds the
+watermark; the aggregation is the same on a batch frame, which is what
+the stream≡batch tests compare. The keyed-state window key the sampler
+shards on is built next to its machine
+(streaming/sampling.windowed_priority_rows).
 
 Scale notes: windowed groupBy is a hash aggregation with map-side partial
 aggregation — one shuffle on (key, window). For skewed keys use

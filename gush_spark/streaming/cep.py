@@ -247,7 +247,7 @@ def _load_cep_state(stored) -> dict[str, tuple[int, int, int]]:
     return {} if stored is None else {u: (t, c, s) for u, t, c, s in zip(*stored)}
 
 
-def _save_cep_state(sdict: dict, watermark_ms: int):
+def _save_cep_state(sdict: dict):
     if not sdict:
         return None
     return (list(sdict), [v[0] for v in sdict.values()],
@@ -469,6 +469,6 @@ def cep_enrich(
         ev, ["host"], output_schema, GENERIC_STATE_SCHEMA,
         load=lambda stored: {} if stored is None else json.loads(stored[0]),
         step=step,
-        save=lambda sdict, watermark_ms: (json.dumps(sdict),) if sdict else None,
+        save=lambda sdict: (json.dumps(sdict),) if sdict else None,
         deadline=lambda key, clock_ms: clock_ms + ttl_ms if ttl_ms else None,
     )

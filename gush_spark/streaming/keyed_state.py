@@ -3,17 +3,14 @@ speaks ``applyInPandasWithState``'s GroupState protocol.
 
 Gush's CEP layer is one keyed flow per event stream (cep/Cep.scala).
 Here each keyed machine — the CEP default machine and its plug-in rules
-(streaming/cep.py), near-dup band buckets (streaming/dedup.py), the
-Misra-Gries heavy-hitter summary (streaming/heavy_hitters.py) and the
-priority sampler (streaming/sampling.py) — supplies only its codec and
-its transition:
+(streaming/cep.py) and the priority sampler (streaming/sampling.py) —
+supplies only its codec and its transition:
 
 - ``load(stored | None) -> acc``: decode the stored state tuple (None:
   the key has no state yet);
 - ``step(key, acc, pdf) -> (acc, out)``: fold one non-empty Arrow chunk
   of the key's rows; ``out`` (a frame or None) is emitted;
-- ``save(acc, watermark_ms) -> stored | None``: encode; None clears the
-  key. ``watermark_ms`` is 0 before the first watermark exists;
+- ``save(acc) -> stored | None``: encode; None clears the key;
 - ``deadline(key, clock_ms) -> ms | None``: the event-time timeout to
   arm after a save (None arms nothing);
 - ``expire(key, acc) -> out``: the rows a timed-out key emits before
@@ -94,14 +91,13 @@ def run_keyed(
                 yield out
             if event_time:
                 newest = max(newest, pdf[event_time].max())
-        watermark_ms = max(state.getCurrentWatermarkMs(), 0) if event_time else 0
-        stored = save(acc, watermark_ms)
+        stored = save(acc)
         if stored is None:
             state.remove()
             return
         state.update(stored)
         if event_time:
-            clock_ms = watermark_ms or (
+            clock_ms = max(state.getCurrentWatermarkMs(), 0) or (
                 newest.tz_localize(tz, ambiguous=True, nonexistent="shift_forward").value
                 // 1_000_000
             )

@@ -12,24 +12,21 @@ min-k over a DETERMINISTIC per-row priority
     priority = md5_60('ws|' ‖ url)  DIV  max(weight, 1)
 
 and min-k is associative and commutative — merging per microbatch in
-any order yields EXACTLY the batch answer, not an approximation. That
-makes this the strongest contract in the streaming family: where the
-Misra-Gries emitter (streaming/heavy_hitters.py) promises a superset
-and needs a recount pass, the streamed sample after
-:func:`finalize_window_sample` EQUALS the batch twin row for row under
-any batching (pinned by test).
+any order yields EXACTLY the batch answer, not an approximation: the
+streamed sample after :func:`finalize_window_sample` EQUALS the batch
+twin row for row under any batching (pinned by test).
 
-Shard discipline copied from the heavy-hitter emitter: the state keys
-(window, shard = pmod(xxhash64(url), S)) so one hot window spreads
-over S tasks; every copy of a url lands in one shard, per-shard min-k
-emits ≤ k candidates on event-time timeout, and the finalize step —
-min-k over ≤ S·k candidate rows — restores the exact global sample
-(min-k distributes over the shard partition).
+Shard discipline: the state keys (window, shard = pmod(xxhash64(url),
+S)) so one hot window spreads over S tasks; every copy of a url lands
+in one shard, per-shard min-k emits ≤ k candidates on event-time
+timeout, and the finalize step — min-k over ≤ S·k candidate rows —
+restores the exact global sample (min-k distributes over the shard
+partition).
 
 Production use: "give me a length-biased sample of every 5-minute
-crawl slice, live" — the monitoring/eval feed next to the quality
-monitor's counters, with the sample reproducible across retries,
-partitionings and engines (no rand(), no seed drift).
+crawl slice, live" — the monitoring/eval feed, with the sample
+reproducible across retries, partitionings and engines (no rand(), no
+seed drift).
 
 No reference analog (gush has no sampling surface); driver-brief
 training-pipeline surface at streaming tier.
@@ -42,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gush_spark.streaming.heavy_hitters import run_window_summary, window_shard_key
+from gush_spark.streaming.keyed_state import run_keyed
 
 SAMPLE_SCHEMA = T.StructType(
     [
@@ -75,7 +72,9 @@ def windowed_priority_rows(
 ) -> DataFrame:
     """Map-only (ts, window_start_us, window_end_ms, shard, url,
     weight, priority) rows — works on a stream (adds the watermark) or
-    a batch frame (the exact-twin path)."""
+    a batch frame (the exact-twin path). ``(window_start_us,
+    window_end_ms, shard)`` is the key the sampler keeps state under;
+    ``window_end_ms`` is its event-time timeout."""
     df = pages
     if pages.isStreaming:
         df = df.withWatermark(ts_col, watermark_delay)
@@ -91,7 +90,9 @@ def windowed_priority_rows(
         ).alias("_u"),
     ).select(
         F.col(ts_col),
-        *window_shard_key("_w", "url", shards),
+        F.unix_micros(F.col("_w.start")).alias("window_start_us"),
+        F.unix_millis(F.col("_w.end")).alias("window_end_ms"),
+        F.pmod(F.xxhash64("url"), F.lit(int(shards))).cast("int").alias("shard"),
         "url",
         "weight",
         F.expr("_u DIV weight").alias("priority"),
@@ -153,16 +154,30 @@ def windowed_priority_sample(
         watermark_delay=watermark_delay,
         shards=shards,
     )
-    return run_window_summary(
-        rows, SAMPLE_SCHEMA, _STATE_SCHEMA,
+
+    def expire(key: tuple, acc) -> pd.DataFrame:
+        urls, weights, priorities = acc
+        n = len(urls)
+        return pd.DataFrame(
+            {
+                "window_start_us": [int(key[0])] * n,
+                "shard": pd.array([int(key[2])] * n, dtype="int32"),
+                "url": list(urls),
+                "weight": [int(v) for v in weights],
+                "priority": [int(v) for v in priorities],
+            }
+        )
+
+    return run_keyed(
+        rows, ["window_start_us", "window_end_ms", "shard"], SAMPLE_SCHEMA, _STATE_SCHEMA,
         load=lambda stored: ([], [], []) if stored is None else stored,
-        merge=lambda acc, pdf: _merge_topk(pdf, acc, k),
+        step=lambda key, acc, pdf: (_merge_topk(pdf, acc, k), None),
         save=lambda acc: acc,
-        emit=lambda acc: {
-            "url": list(acc[0]),
-            "weight": [int(v) for v in acc[1]],
-            "priority": [int(v) for v in acc[2]],
-        },
+        # fire when the watermark passes the window end; if the
+        # watermark is already past it (stragglers admitted late), the
+        # timeout must still be set in the future
+        deadline=lambda key, clock_ms: max(int(key[1]), clock_ms + 1),
+        expire=expire,
     )
 
 

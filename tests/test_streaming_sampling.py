@@ -1,8 +1,7 @@
 """Streaming windowed priority sample (streaming/sampling.py): min-k
 over a deterministic priority is associative, so the streamed sample
 after finalize must EQUAL the batch twin row for row under real
-microbatch boundaries — the strongest stream/batch contract in the
-repo (the MG emitter only promises a superset)."""
+microbatch boundaries."""
 
 import datetime as dt
 import os

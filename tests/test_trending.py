@@ -19,8 +19,9 @@ def pages_dir(tmp_path_factory):
 
 
 def _drop_late(df):
-    # same rule as test_streaming_sketches: remove the fixture's ~3%
-    # deliberately-late rows so exact stream≡batch equality is defined
+    # remove the fixture's ~3% deliberately-late rows (page i is
+    # scheduled at 2i s after the epoch) so exact stream≡batch equality
+    # is defined
     i = F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long")
     sched = F.timestamp_seconds(
         F.unix_timestamp(F.to_timestamp(F.lit("2024-03-01 00:00:00"))) + i * 2

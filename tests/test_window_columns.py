@@ -13,17 +13,13 @@ from types import SimpleNamespace
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from gush_spark import queries, queries_pipeline
 from gush_spark.operators import trending, windows
 from gush_spark.sources.fixtures import generate_pages
-from gush_spark.streaming import heavy_hitters, monitor, pipeline, sampling, sketches
+from gush_spark.streaming import pipeline, sampling
 from gush_spark.streaming.source import read_pages_batch
 
 WINDOW = ["window_start", "window_end"]
-QUALITY = ["n_rows", "n_null_text", "n_empty", "n_nonnull", "sum_chars", "min_chars",
-           "max_chars"]
 KW = dict(ts_col="warc_ts", window_duration="5 minutes", watermark_delay="1 minute")
 TEXT = dict(KW, text_col="extracted_text")
 
@@ -73,35 +69,12 @@ OPERATORS = {
     "windowed_link_edges": (
         lambda f: pipeline.windowed_link_edges(f.raw, streaming=False),
         [*WINDOW, "src_host", "dst_host", "n_links"]),
-    "windowed_quality_counters": (
-        lambda f: monitor.windowed_quality_counters(f.pages, group_cols=("host",), **TEXT),
-        ["window_start", "host", *QUALITY]),
-    "windowed_length_histogram": (
-        lambda f: monitor.windowed_length_histogram(f.pages, group_cols=("host",), **TEXT),
-        ["window_start", "host", "bucket", "n"]),
-    "windowed_fingerprint_registers": (
-        lambda f: monitor.windowed_fingerprint_registers(
-            f.pages, group_cols=("host",), **TEXT),
-        ["window_start", "host", "hll_bucket", "m_j"]),
-    "windowed_hll_registers": (
-        lambda f: sketches.windowed_hll_registers(f.pages, key=F.col("url"), **KW),
-        ["window_start", "hll_bucket", "m_j"]),
-    "windowed_cms_counters": (
-        lambda f: sketches.windowed_cms_counters(f.pages, key=F.col("host"), **KW),
-        ["window_start", "r", "b", "c"]),
-    "windowed_histogram_bins": (
-        lambda f: sketches.windowed_histogram_bins(
-            f.pages, value=F.length("extracted_text"), width=64.0, **KW),
-        ["window_start", "bin", "c"]),
     "windowed_term_counts": (
         lambda f: trending.windowed_term_counts(f.pages, **TEXT),
         ["window_start", "term", "n"]),
     "windowed_term_counts_unhashed": (
         lambda f: trending.windowed_term_counts(f.pages, hash_terms=False, **TEXT),
         ["window_start", "term", "n"]),
-    "windowed_gram_slots": (
-        lambda f: heavy_hitters.windowed_gram_slots(f.raw),
-        ["warc_ts", "window_start_us", "window_end_ms", "shard", "gram"]),
     "windowed_priority_rows": (
         lambda f: sampling.windowed_priority_rows(f.raw),
         ["warc_ts", "window_start_us", "window_end_ms", "shard", "url", "weight",

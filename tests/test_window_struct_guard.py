@@ -1,9 +1,9 @@
 """Only ``operators/windows.py`` turns an event-time window struct into
-columns (``windowed_agg``), and only the keyed-state window key next to
-``run_window_summary`` (``streaming/heavy_hitters.py``) reads a struct's
-start and end for the keyed-state machines. Every other windowed
-operator groups through ``windowed_agg``, so the window columns are
-named and ordered in one place."""
+columns (``windowed_agg``), and only the sampler's keyed-state window
+key (``streaming/sampling.py``) reads a struct's start and end for its
+keyed-state machine. Every other windowed operator groups through
+``windowed_agg``, so the window columns are named and ordered in one
+place."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ import re
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "gush_spark"
-ALLOWED = {Path("operators") / "windows.py", Path("streaming") / "heavy_hitters.py"}
+ALLOWED = {Path("operators") / "windows.py", Path("streaming") / "sampling.py"}
 # "w.start" / f"{struct}.end" column references, getField/getItem("start")
 # and ["end"] subscripts
 STRUCT_FIELD = re.compile(
