@@ -3,7 +3,8 @@
 
 Runs every catalog query from ``__spark_entry__.queries()`` against
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` (default 32), materializing each result via
+``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this process may run
+on, ``gush_spark.session.DEFAULT_CPUS``), materializing each result via
 the ``noop`` sink (full execution, no driver collect). Also measures the
 flagship streaming pipeline (pages stream -> vectorized extraction ->
 windowed counts -> exactly-once sink) as sustained pages/sec plus p95
@@ -34,7 +35,6 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 BENCH_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "60000"))
 # streaming state partitions: per-microbatch fixed cost is O(state
 # partitions) (one RocksDB store commit each), so size to the data volume
@@ -284,9 +284,10 @@ def _stream_once(spark) -> dict:
 
 
 def main() -> None:
-    from gush_spark.session import build_session
+    from gush_spark.session import DEFAULT_CPUS, build_session
 
-    spark = build_session("gush_spark_bench", cores=CPUS, shuffle_partitions=CPUS)
+    spark = build_session("gush_spark_bench", cores=DEFAULT_CPUS,
+                          shuffle_partitions=DEFAULT_CPUS)
     timings, runs, suspect = bench_queries(spark)
     ann_index = bench_ann_index(spark)
     streaming = None if SKIP_STREAMING else bench_streaming(spark)
@@ -300,7 +301,7 @@ def main() -> None:
         "query_runs": runs,
         "throttle_suspect": suspect,
         "sf": _sf_of(SF_DIR),
-        "cpus": CPUS,
+        "cpus": DEFAULT_CPUS,
         "ann_index": ann_index,
     }
     if streaming:

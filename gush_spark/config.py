@@ -66,7 +66,9 @@ class GushSparkConfig:
 
         Mirrors the reference's fail-if-incomplete behavior
         (BinlogServerReader.scala:41-53): unknown keys go to ``extra``,
-        list keys accept comma-separated strings.
+        list keys accept comma-separated strings, and a
+        ``window_duration`` or ``watermark_delay`` that ``duration_us``
+        cannot read raises ``ValueError`` here, before any job starts.
         """
         text = Path(path).read_text()
         raw: dict[str, str] = {}
@@ -89,6 +91,9 @@ class GushSparkConfig:
             for k in _YAML_SCALARS
             if k in raw
         }
+        for k in ("window_duration", "watermark_delay"):
+            if k in scalars:
+                duration_us(scalars[k])  # ValueError on a malformed duration
         return GushSparkConfig(**lists, **scalars, extra=raw)
 
 

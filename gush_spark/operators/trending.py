@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from gush_spark.functions.text_analysis import words_of
-from gush_spark.operators.windows import windowed_agg
+from gush_spark.operators.windows import event_time, windowed_agg
 
 
 def windowed_term_counts(
@@ -37,10 +37,9 @@ def windowed_term_counts(
     watermark_delay: str | None = None,
     hash_terms: bool = True,
 ) -> DataFrame:
-    """(window_start, term, n) token counts per tumbling window."""
-    if df.isStreaming and watermark_delay:
-        df = df.withWatermark(ts_col, watermark_delay)
-    toks = df.select(
+    """(window_start, term, n) token counts per tumbling window,
+    watermarked ``watermark_delay`` on a stream (None: no watermark)."""
+    toks = event_time(df, ts_col, watermark_delay).select(
         F.col(ts_col).alias("_ts"),
         F.explode(words_of(F.col(text_col))).alias("term"),
     ).filter(F.col("term") != "")

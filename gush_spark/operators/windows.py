@@ -9,8 +9,9 @@ sliding and session windows on the event timestamp with watermarks.
 every windowed operator in the engine (the streaming pipelines,
 trending terms and the catalog queries) groups through it and gets
 ``window_start``/``window_end`` back in place of the window struct.
-The caller builds the window column and, on a stream, adds the
-watermark; the aggregation is the same on a batch frame, which is what
+The caller builds the window column and declares its event time with
+``event_time``, the engine's one watermark (``event_time_column`` reads
+it back); the aggregation is the same on a batch frame, which is what
 the stream≡batch tests compare. The keyed-state window key the sampler
 shards on is built next to its machine
 (streaming/sampling.windowed_priority_rows).
@@ -25,6 +26,20 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def event_time(df: DataFrame, ts_col: str, delay: str | None) -> DataFrame:
+    """``df`` watermarked ``delay`` on ``ts_col`` when it is a stream;
+    a batch frame or ``delay=None`` (the only opt-out) comes back as is.
+    Spark rejects a malformed ``delay``."""
+    if df.isStreaming and delay is not None:
+        return df.withWatermark(ts_col, delay)
+    return df
+
+
+def event_time_column(df: DataFrame) -> str | None:
+    """The column ``event_time`` watermarked upstream of ``df``, or None."""
+    return next((f.name for f in df.schema if "spark.watermarkDelayMs" in f.metadata), None)
 
 
 def tumbling(ts_col: str, duration: str) -> Column:

@@ -24,7 +24,8 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: local cores: ``SPARK_GRAFT_CPUS``, else the CPUs this process may run on
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 DRIVER_MEM_CAP_MB = 20 * 1024
 
 

@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from gush_spark.operators.windows import event_time
 from gush_spark.streaming.keyed_state import run_keyed
 
 CEP_OUTPUT_SCHEMA = T.StructType(
@@ -417,6 +418,8 @@ def cep_enrich(
     Default (rule=None): the crawl/recrawl/drop machine
     (``apply_rules_fast``) with the typed parallel-array state codec.
 
+    ``watermark_delay=None`` runs a stream with no event-time timeouts.
+
     ``emit_closures=True`` emits one ``session_closed`` summary row per
     live url when a host's state is TTL-evicted (event-time idle past
     the watermark) — session-end records instead of silent eviction.
@@ -440,9 +443,8 @@ def cep_enrich(
     """
     from pyspark.sql import functions as F
 
-    ev = events.withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-    if watermark_delay and events.isStreaming:
-        ev = ev.withWatermark("warc_ts", watermark_delay)
+    ev = event_time(events.withColumn("warc_ts", F.col("warc_ts").cast("timestamp")),
+                    "warc_ts", watermark_delay)
     # keep the watermarked event-time column in the projection — dropping
     # it would strip the watermark the event-time timeout depends on
     ev = ev.select(

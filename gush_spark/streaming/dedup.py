@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from gush_spark.functions.text_analysis import md5_fingerprint
+from gush_spark.operators.windows import event_time
 
 
 def with_fingerprint(pages: DataFrame, text_col: str = "text") -> DataFrame:
@@ -39,9 +40,9 @@ def dedup_pages_stream(
     """First-occurrence-wins streaming dedup on content fingerprint.
     Requires an event-time column ``warc_ts``; the watermark bounds
     both late data and dedup state lifetime."""
-    df = with_fingerprint(pages, text_col)
-    if pages.isStreaming:
-        df = df.withWatermark("warc_ts", watermark_delay)
+    df = event_time(with_fingerprint(pages, text_col), "warc_ts", watermark_delay)
+    # dropDuplicatesWithinWatermark raises on a batch frame
+    if df.isStreaming:
         return df.dropDuplicatesWithinWatermark(["fingerprint"])
     return df.dropDuplicates(["fingerprint"])
 

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gush_spark.operators.windows import event_time
+
 
 def join_events_within(
     crawls: DataFrame,
@@ -47,25 +49,17 @@ def join_events_within(
     key, crawl event id/ts, follow event id/ts/type (follow columns
     null for unmatched crawls under leftOuter).
     """
-    c = (
-        crawls.select(
-            F.col(key).alias("jkey"),
-            F.col("event_id").alias("crawl_event_id"),
-            F.col("warc_ts").cast("timestamp").alias("crawl_ts"),
-        )
-    )
-    f = (
-        follows.select(
-            F.col(key).alias("fkey"),
-            F.col("event_id").alias("follow_event_id"),
-            F.col("warc_ts").cast("timestamp").alias("follow_ts"),
-            F.col("event_type").alias("follow_type"),
-        )
-    )
-    if crawls.isStreaming:
-        c = c.withWatermark("crawl_ts", watermark_delay)
-    if follows.isStreaming:
-        f = f.withWatermark("follow_ts", watermark_delay)
+    c = event_time(crawls.select(
+        F.col(key).alias("jkey"),
+        F.col("event_id").alias("crawl_event_id"),
+        F.col("warc_ts").cast("timestamp").alias("crawl_ts"),
+    ), "crawl_ts", watermark_delay)
+    f = event_time(follows.select(
+        F.col(key).alias("fkey"),
+        F.col("event_id").alias("follow_event_id"),
+        F.col("warc_ts").cast("timestamp").alias("follow_ts"),
+        F.col("event_type").alias("follow_type"),
+    ), "follow_ts", watermark_delay)
     return c.join(
         f,
         F.expr(

@@ -18,8 +18,9 @@ supplies only its codec and its transition:
 
 The runner owns the rest. State is decoded once and encoded once per
 call. Timeouts are event-time, and on only when the frame is streaming
-and carries a watermarked column (``withWatermark`` tags it); otherwise
-the query runs with no timeout. ``clock_ms`` is the current watermark,
+and carries a watermarked column (``operators/windows.event_time``
+declares it, ``event_time_column`` reads it back); otherwise the query
+runs with no timeout. ``clock_ms`` is the current watermark,
 or — before the first watermark exists (batch 0) — the newest event
 time in the call, so a key seen only in the first microbatch still
 expires once the watermark passes its deadline.
@@ -37,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from gush_spark.operators.windows import event_time_column
 
 
 def run_keyed(
@@ -66,9 +69,7 @@ def run_keyed(
 
         return grouped.applyInPandas(twin, out_schema)
 
-    event_time = next(
-        (f.name for f in df.schema if "spark.watermarkDelayMs" in f.metadata), None
-    )
+    event_time = event_time_column(df)
     # chunks carry timestamps as naive wall-clock time in the session zone
     tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
 

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from gush_spark.config import DEFAULT_CONFIG, GushSparkConfig, duration_us
 from gush_spark.functions.extract import with_extracted_text
 from gush_spark.operators.events import blacklist_filter, host_of, supported_kinds_filter
-from gush_spark.operators.windows import windowed_agg
+from gush_spark.operators.windows import event_time, windowed_agg
 from gush_spark.streaming.cep import cep_enrich
 from gush_spark.streaming.metrics import partition_lineage, with_observed_metrics
 from gush_spark.streaming.sink import IdempotentKeyedSink
@@ -79,13 +79,11 @@ def _run(
     return writer.start(), sink
 
 
-def _windowed(df: DataFrame, config: GushSparkConfig, keys: list[str], aggs,
-              streaming: bool = True) -> DataFrame:
+def _windowed(df: DataFrame, config: GushSparkConfig, keys: list[str], aggs) -> DataFrame:
     """Tumbling ``config.window_duration`` event-time aggregation of
-    ``aggs`` per ``keys`` (watermarked when streaming) through
+    ``aggs`` per ``keys`` (watermarked on a stream) through
     ``windowed_agg``."""
-    if streaming:
-        df = df.withWatermark("warc_ts", config.watermark_delay)
+    df = event_time(df, "warc_ts", config.watermark_delay)
     return windowed_agg(df, F.window("warc_ts", config.window_duration), keys, aggs)
 
 
@@ -110,8 +108,12 @@ def extracted_pages(
 
 
 def windowed_host_counts(extracted: DataFrame, config: GushSparkConfig = DEFAULT_CONFIG,
-                         streaming: bool = True) -> DataFrame:
-    return _windowed(extracted, config, ["host"], _page_counts(), streaming)
+                         streaming: bool | None = None) -> DataFrame:
+    """Pages and extraction errors per (host, window); watermarked when
+    ``extracted`` is a stream. ``streaming`` is ignored: the frame
+    decides. It is still accepted because the benchmark's batch twin
+    (perfbench/run.py) passes ``streaming=False``."""
+    return _windowed(extracted, config, ["host"], _page_counts())
 
 
 def pages_pipeline(
@@ -128,7 +130,7 @@ def pages_pipeline(
     page granularity)."""
     stream = read_input_stream(spark, pages_path, config)
     extracted = with_observed_metrics(extracted_pages(stream, config))
-    agg = windowed_host_counts(extracted, config, streaming=True)
+    agg = windowed_host_counts(extracted, config)
     sink = IdempotentKeyedSink(sink_path, keys=["host", "window_start"])
     return _run(agg, sink, checkpoint_path, available_now, lineage_path=lineage_path)
 
@@ -530,9 +532,7 @@ def cep_pipeline(
 # host→host counts → exactly-once keyed sink (job.py --pipeline linkgraph)
 # ---------------------------------------------------------------------------
 def windowed_link_edges(
-    pages: DataFrame,
-    config: GushSparkConfig = DEFAULT_CONFIG,
-    streaming: bool = True,
+    pages: DataFrame, config: GushSparkConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """Per-window host→host link edge counts straight off the raw html
     (operators/links.extract_links: JVM regexp tag scan + one explode,
@@ -555,7 +555,7 @@ def windowed_link_edges(
         keep=("warc_ts",),
     )
     return _windowed(links, config, ["src_host", "dst_host"],
-                     [F.count(F.lit(1)).alias("n_links")], streaming)
+                     [F.count(F.lit(1)).alias("n_links")])
 
 
 def link_graph_pipeline(
@@ -574,7 +574,7 @@ def link_graph_pipeline(
     consumes — the crawl's link structure maintained incrementally
     instead of recomputed per snapshot."""
     stream = read_input_stream(spark, pages_path, config)
-    agg = windowed_link_edges(stream, config, streaming=True)
+    agg = windowed_link_edges(stream, config)
     sink = IdempotentKeyedSink(
         sink_path, keys=["src_host", "dst_host", "window_start"]
     )

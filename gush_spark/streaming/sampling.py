@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gush_spark.operators.windows import event_time
 from gush_spark.streaming.keyed_state import run_keyed
 
 SAMPLE_SCHEMA = T.StructType(
@@ -75,11 +76,8 @@ def windowed_priority_rows(
     a batch frame (the exact-twin path). ``(window_start_us,
     window_end_ms, shard)`` is the key the sampler keeps state under;
     ``window_end_ms`` is its event-time timeout."""
-    df = pages
-    if pages.isStreaming:
-        df = df.withWatermark(ts_col, watermark_delay)
     w = F.greatest(F.expr(weight_expr).cast("long"), F.lit(1))
-    return df.select(
+    return event_time(pages, ts_col, watermark_delay).select(
         F.col(ts_col),
         F.window(F.col(ts_col), window_duration).alias("_w"),
         F.col(url_col).alias("url"),

@@ -43,6 +43,15 @@ hot_host_threshold: 100000
     assert c.input_format == DEFAULT_CONFIG.input_format
 
 
+@pytest.mark.parametrize("key", ["window_duration", "watermark_delay"])
+@pytest.mark.parametrize("value", ["ten minutes", "1.5 hours", "10 mins"])
+def test_from_yaml_rejects_malformed_durations(tmp_path, key, value):
+    p = tmp_path / "gush.yml"
+    p.write_text(f"ignored_hosts: [spam.example]\n{key}: {value}\n")
+    with pytest.raises(ValueError, match=value):
+        GushSparkConfig.from_yaml(p)
+
+
 def test_from_yaml_empty_lists(tmp_path):
     p = tmp_path / "gush.yml"
     p.write_text("ignored_hosts: []\n")
@@ -61,7 +70,6 @@ MIN_US = 60 * 1_000_000
         ("1 minute", MIN_US),
         ("4 hours", 240 * MIN_US),
         ("30 minutes", 30 * MIN_US),
-        # near-dup horizons
         ("90 seconds", 90 * 1_000_000),
         ("2 hours", 120 * MIN_US),
         ("1 day", 1440 * MIN_US),

@@ -2,9 +2,25 @@
 and checkpoint/state/sink files go through the FileSystem API on the raw
 local filesystem."""
 
+import importlib
+import os
 from pathlib import Path
 
+from gush_spark import session
 from gush_spark.session import default_driver_memory
+
+
+def test_default_cpus_without_the_variable_is_the_cpus_we_may_run_on(monkeypatch):
+    """Unset, ``SPARK_GRAFT_CPUS`` falls back to this process's CPU
+    affinity — not a fixed count that oversubscribes a small host."""
+    try:
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+        assert importlib.reload(session).DEFAULT_CPUS == len(os.sched_getaffinity(0))
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+        assert importlib.reload(session).DEFAULT_CPUS == 3
+    finally:
+        monkeypatch.undo()
+        importlib.reload(session)
 
 
 def test_driver_memory_is_half_of_ram():

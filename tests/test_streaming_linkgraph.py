@@ -60,9 +60,7 @@ def pages_dir(tmp_path_factory):
 
 
 def _expected(spark, pages_dir):
-    return windowed_link_edges(
-        read_pages_batch(spark, pages_dir), CFG, streaming=False
-    ).toPandas()
+    return windowed_link_edges(read_pages_batch(spark, pages_dir), CFG).toPandas()
 
 
 def test_stream_equals_batch(spark, pages_dir, tmp_dirs):

@@ -39,7 +39,7 @@ def test_streaming_counts_equal_batch(spark, pages_dir, tmp_dirs):
     got = sink.read(spark).toPandas()
 
     batch = windowed_host_counts(
-        extracted_pages(read_pages_batch(spark, pages_dir), CFG), CFG, streaming=False
+        extracted_pages(read_pages_batch(spark, pages_dir), CFG), CFG
     ).toPandas()
 
     key = ["window_start", "host"]
@@ -93,7 +93,7 @@ def test_salted_rollup_equals_unsalted(
 
     got = read_salted_rollup(spark, sink).toPandas()
     batch = windowed_host_counts(
-        extracted_pages(read_pages_batch(spark, pages_dir), CFG), CFG, streaming=False
+        extracted_pages(read_pages_batch(spark, pages_dir), CFG), CFG
     ).toPandas()
 
     key = ["window_start", "host"]
@@ -125,7 +125,7 @@ def test_featurize_counts_equal_batch(
 
     got = sink.read(spark).toPandas()
     batch = windowed_host_counts(
-        extracted_pages(read_pages_batch(spark, pages_dir), CFG), CFG, streaming=False
+        extracted_pages(read_pages_batch(spark, pages_dir), CFG), CFG
     ).toPandas()
     key = ["window_start", "host"]
     pd.testing.assert_frame_equal(

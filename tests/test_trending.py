@@ -363,8 +363,7 @@ def test_read_host_anomalies_stream_equals_batch(spark, tmp_path, tmp_dirs):
     got = read_host_anomalies(spark, sink, **params)
 
     batch_counts = windowed_host_counts(
-        extracted_pages(read_pages_batch(spark, pages_dir), cfg),
-        cfg, streaming=False,
+        extracted_pages(read_pages_batch(spark, pages_dir), cfg), cfg
     ).select("host", "window_start", F.col("n_pages").alias("n"))
     want = volume_anomaly_windows(batch_counts, "host", **params)
 

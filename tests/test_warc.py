@@ -140,8 +140,7 @@ def test_pages_pipeline_over_warc_equals_parquet(spark, tmp_path):
 
     # batch over parquet
     exp = windowed_host_counts(
-        extracted_pages(read_input_batch(spark, str(pq_dir), cfg), cfg),
-        cfg, streaming=False,
+        extracted_pages(read_input_batch(spark, str(pq_dir), cfg), cfg), cfg
     ).toPandas()
 
     key = ["window_start", "host"]

@@ -64,10 +64,10 @@ OPERATORS = {
         lambda f: windows.session_count(f.events, "ts", "30 minutes", "user_id"),
         [*WINDOW, "user_id", "n_events"]),
     "windowed_host_counts": (
-        lambda f: pipeline.windowed_host_counts(f.pages, streaming=False),
+        lambda f: pipeline.windowed_host_counts(f.pages),
         [*WINDOW, "host", "n_pages", "n_errors"]),
     "windowed_link_edges": (
-        lambda f: pipeline.windowed_link_edges(f.raw, streaming=False),
+        lambda f: pipeline.windowed_link_edges(f.raw),
         [*WINDOW, "src_host", "dst_host", "n_links"]),
     "windowed_term_counts": (
         lambda f: trending.windowed_term_counts(f.pages, **TEXT),
